@@ -29,8 +29,9 @@ from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
 
 from python_minerva_etl_spark.session import get_spark  # noqa: E402
+from python_minerva_etl_spark.storage.core import may_match  # noqa: E402
 from python_minerva_etl_spark.storage.delta import (  # noqa: E402
-    DeltaTable, _add_may_match)
+    DeltaTable, add_bounds)
 
 BASE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                     "..", ".scratch", "zorder_demo")
@@ -41,7 +42,7 @@ def planned(dt, preds):
     t_of = {"x": T.LongType(), "y": T.LongType(),
             "v": T.LongType()}
     m = [f for f in snap["files"]
-         if _add_may_match(f, preds, [], t_of)]
+         if may_match(add_bounds(f, [], t_of), preds)]
     return len(m), len(snap["files"])
 
 

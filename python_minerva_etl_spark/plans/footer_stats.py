@@ -20,8 +20,9 @@ the manifest.
 
 Exactness: int/timestamp parquet statistics are exact (truncation
 only applies to BYTE_ARRAY stats, which we refuse).  If any row
-group lacks stats the helper falls back to ONE 1-row Spark aggregate
-— correctness never depends on footers being present.
+group with values lacks stats the helper falls back to ONE 1-row
+Spark aggregate — correctness never depends on footers being
+present.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ import datetime
 import os
 
 from ..registry import table_path
+from ..storage.core import footer_stats
 
 # Physical types whose parquet min/max statistics are exact values.
 # BYTE_ARRAY stats may be truncated bounds; FLOAT/DOUBLE min/max can be
@@ -54,36 +56,22 @@ def _parquet_files(path: str) -> list[str]:
 
 def parquet_minmax(path: str, column: str):
     """Exact (min, max) of ``column`` across the parquet file/dir at
-    ``path`` from footer statistics alone.  Returns ``None`` when any
-    row group lacks exact stats (caller falls back to an aggregate);
-    raises ``KeyError`` on an unknown column."""
-    import pyarrow.parquet as pq
-
+    ``path`` from footer statistics alone
+    (:func:`storage.core.footer_stats`).  Returns ``None`` when any
+    file leaves the column unbounded or without values (caller falls
+    back to an aggregate); raises ``KeyError`` on an unknown column."""
     lo = hi = None
     files = _parquet_files(path)
     if not files:
         return None
     for fpath in files:
-        md = pq.ParquetFile(fpath).metadata
-        sch = md.schema
-        try:
-            idx = next(i for i in range(md.num_columns)
-                       if sch.column(i).name == column)
-        except StopIteration:
+        st = footer_stats(fpath, [column])[1].get(column)
+        if st is None:
             raise KeyError(f"column {column!r} not in {fpath}")
-        if sch.column(idx).physical_type not in _EXACT_PHYSICAL:
+        if st.physical_type not in _EXACT_PHYSICAL or st.min is None:
             return None
-        for rg in range(md.num_row_groups):
-            cc = md.row_group(rg).column(idx)
-            if cc.num_values == 0:
-                continue
-            st = cc.statistics
-            if st is None or not st.has_min_max:
-                return None
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-    if lo is None:
-        return None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
     return lo, hi
 
 

@@ -1,17 +1,18 @@
 """Avro object-container files as a Spark source — no spark-avro jar.
 
-Built on the same from-scratch Avro decoder as the Iceberg interop
-(:func:`storage.iceberg.avro_read`, Avro 1.11 spec).  The read is
-DISTRIBUTED and SPLITTABLE: the driver touches only the FIRST file's
-header (to derive the Spark schema); decoding runs as ``mapInPandas``
-tasks over BYTE-RANGE SPLITS aligned on the container's 16-byte sync
-markers (default 128 MiB per split), so one multi-GB file decodes
-across many executors, blocks are streamed (never ``fh.read()`` of a
-whole file), and per-task memory is bounded by the Arrow-batch flush
-target — at 100 TB the bytes never pass through the driver, and no
-single file is a straggler or a memory cliff.  Every task re-checks
-its file's embedded writer schema against the driver's and raises on
-drift (mixed-schema directories must fail loudly, not coerce).
+Built on the storage core's from-scratch Avro codec
+(:mod:`storage.core`, Avro 1.11 spec), shared with the Iceberg
+interop.  The read is DISTRIBUTED and SPLITTABLE: the driver touches
+only the FIRST file's header (to derive the Spark schema); decoding
+runs as ``mapInPandas`` tasks over BYTE-RANGE SPLITS aligned on the
+container's 16-byte sync markers (default 128 MiB per split), so one
+multi-GB file decodes across many executors, blocks are streamed
+(never ``fh.read()`` of a whole file), and per-task memory is bounded
+by the Arrow-batch flush target — at 100 TB the bytes never pass
+through the driver, and no single file is a straggler or a memory
+cliff.  Every task re-checks its file's embedded writer schema
+against the driver's and raises on drift (mixed-schema directories
+must fail loudly, not coerce).
 
 Schema scope (raise otherwise — never silently misread):
 
@@ -44,6 +45,10 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..storage.core import (BLOCK_CODECS, Cursor, avro_decode,
+                            avro_encode, container_block,
+                            container_header, read_blocks, read_header)
 
 _EPOCH_DATE = datetime.date(1970, 1, 1)
 _EPOCH_TS = datetime.datetime(1970, 1, 1)
@@ -550,167 +555,12 @@ def _list_files(path: str) -> list[str]:
 # -------------------------------------------------- split machinery
 #
 # Avro object-container files are splittable by design: every block
-# is delimited by the file's random 16-byte sync marker (Avro 1.11
-# "Object Container Files").  A byte range [start, end) of a file
-# OWNS exactly the blocks whose preceding sync marker begins at an
-# offset p with start <= p < end, the header's own trailing sync
-# standing in for the first block's delimiter — so every block
-# belongs to exactly one range and a file decodes across N tasks
-# with no coordination.  Range scans locate the first owned sync by
-# pattern search (the spec's sanctioned strategy; a coincidental
-# 16-byte match in block data has probability 2^-128 per offset and
-# would fail loudly at the next trailing-sync check, never decode
-# garbage).  Blocks are STREAMED — a task holds one compressed block
-# plus at most ``batch_bytes`` of decoded output, never the file.
-
-def _read_header(fh) -> tuple[dict, bytes, int]:
-    """(metadata, sync_marker, header_end_offset) from an open file,
-    reading only the header bytes (doubling probe, not the file)."""
-    from ..storage.iceberg import _AVRO_MAGIC, _Cursor, _decode
-
-    size = 1 << 16
-    while True:
-        fh.seek(0)
-        buf = fh.read(size)
-        cur = _Cursor(buf)
-        try:
-            if cur.read(4) != _AVRO_MAGIC:
-                raise ValueError("not an Avro object-container file")
-            meta = _decode(cur, {"type": "map", "values": "bytes"}, {})
-            sync = cur.read(16)
-            return meta, sync, cur.pos
-        except ValueError as exc:
-            if "truncated" in str(exc) and len(buf) == size:
-                size *= 2  # header longer than the probe; widen
-                continue
-            raise
-
-
-def _find_sync(fh, sync: bytes, start: int, limit: int):
-    """First offset p in [start, limit) where the 16-byte ``sync``
-    pattern begins, scanning forward in 1 MiB chunks with a 15-byte
-    overlap so straddling matches are found.  None if absent."""
-    chunk_size = 1 << 20
-    fh.seek(start)
-    buf = b""
-    base = start  # absolute offset of buf[0]
-    while base < limit:
-        chunk = fh.read(chunk_size)
-        if not chunk:
-            return None
-        buf += chunk
-        i = buf.find(sync)
-        if i != -1:
-            p = base + i
-            return p if p < limit else None
-        keep = min(15, len(buf))
-        base += len(buf) - keep
-        buf = buf[-keep:]
-    return None
-
-
-def _read_varint_stream(fh) -> int:
-    """Zigzag varint from a (buffered) file object."""
-    shift = acc = 0
-    while True:
-        b = fh.read(1)
-        if not b:
-            raise ValueError("avro: truncated input")
-        v = b[0]
-        acc |= (v & 0x7F) << shift
-        if not v & 0x80:
-            break
-        shift += 7
-    return (acc >> 1) ^ -(acc & 1)
-
-
-def _zstd_frame_size(body: bytes):
-    """Frame_Content_Size of a zstd frame (RFC 8878 §3.1.1.1), or
-    None when the header omits it.  Parsed so pyarrow's zstd
-    decompressor (which requires the exact output size) can run
-    without the optional ``zstandard`` package; every whole-buffer
-    zstd writer (fastavro via zstandard.compress, Java avro, pyarrow)
-    records the size because it is known at compress time."""
-    if len(body) < 6 or body[:4] != b"\x28\xb5\x2f\xfd":
-        return None  # not a (single, non-skippable) zstd frame
-    fhd = body[4]
-    fcs_flag = fhd >> 6
-    single = (fhd >> 5) & 1
-    pos = 5 + (0 if single else 1)          # window descriptor
-    pos += (0, 1, 2, 4)[fhd & 3]            # dictionary id
-    if fcs_flag == 0:
-        return body[pos] if single else None
-    if fcs_flag == 1:
-        return int.from_bytes(body[pos:pos + 2], "little") + 256
-    if fcs_flag == 2:
-        return int.from_bytes(body[pos:pos + 4], "little")
-    return int.from_bytes(body[pos:pos + 8], "little")
-
-
-def _zstd(body: bytes) -> bytes:
-    """Decompress one Avro-zstandard block (a bare zstd frame, no
-    checksum suffix — Avro 1.11 "Required Codecs... zstandard")."""
-    import pyarrow as pa
-
-    size = _zstd_frame_size(body)
-    if size is None:
-        raise ValueError(
-            "avro: zstandard block's frame header carries no "
-            "content size — streaming-compressed frames are not "
-            "supported (re-encode with whole-block compression)")
-    out = pa.Codec("zstd").decompress(body, size)
-    return out.to_pybytes() if hasattr(out, "to_pybytes") \
-        else bytes(out)
-
-
-def _split_blocks(fh, sync: bytes, codec: str, start: int, end: int,
-                  header_end: int, file_size: int):
-    """Yield ``(count, decompressed_bytes)`` for the blocks OWNED by
-    byte range [start, end) under the preceding-sync ownership rule.
-    Streams: reads each block's two varints, its body, and its
-    trailing sync — never the whole file."""
-    from ..storage.iceberg import _snappy
-
-    hsync = header_end - 16  # the first block's "preceding sync"
-    if hsync >= end:
-        return  # range lies entirely inside the header
-    if start <= hsync:
-        pos = header_end
-    else:
-        p = _find_sync(fh, sync, start, end)
-        if p is None:
-            return  # no block starts in this range
-        pos = p + 16
-    if pos >= file_size:
-        return  # range's sync is the file's final one — no block
-    fh.seek(pos)
-    while True:
-        n = _read_varint_stream(fh)
-        size = _read_varint_stream(fh)
-        body = fh.read(size)
-        if len(body) != size:
-            raise ValueError("avro: truncated block")
-        if fh.read(16) != sync:
-            raise ValueError("avro: sync marker mismatch")
-        if codec == "deflate":
-            import zlib
-            body = zlib.decompress(body, -15)
-        elif codec == "snappy":
-            body = _snappy(body)
-        elif codec == "zstandard":
-            body = _zstd(body)
-        elif codec == "bzip2":
-            import bz2
-            body = bz2.decompress(body)
-        elif codec == "xz":
-            import lzma
-            body = lzma.decompress(body, format=lzma.FORMAT_XZ)
-        elif codec != "null":
-            raise ValueError(f"avro: unsupported codec {codec!r}")
-        yield n, body
-        pos = fh.tell()
-        if pos >= file_size or pos - 16 >= end:
-            return  # EOF, or the next block's sync is past our range
+# is delimited by the file's random 16-byte sync marker, so a byte
+# range owns the blocks whose preceding sync starts inside it
+# (:func:`storage.core.read_blocks`) and one file decodes across many
+# tasks with no coordination.  Blocks are STREAMED — a task holds one
+# compressed block plus at most ``batch_bytes`` of decoded output,
+# never the file.
 
 
 def plan_splits(files: list[str],
@@ -741,7 +591,7 @@ def plan_read(path: str):
 
     files = _list_files(path)
     with open(files[0], "rb") as fh:
-        meta, _, _ = _read_header(fh)
+        meta, _, _ = read_header(fh)
     writer_schema = _json.loads(meta["avro.schema"].decode("utf-8"))
     if not (isinstance(writer_schema, dict)
             and writer_schema.get("type") == "record"):
@@ -771,18 +621,16 @@ def split_frames(p: str, start: int, end: int, canon: str,
 
     import pandas as pd
 
-    from ..storage.iceberg import _Cursor, _decode
-
     fields = writer_schema["fields"]
     out_fields = fields if keep is None else [fields[i] for i in keep]
     out_names = [f["name"] for f in out_fields]
 
     def seq_block(body, n):
-        bcur = _Cursor(body)
+        bcur = Cursor(body)
         names: dict = {}
         rows = []
         for _ in range(n):
-            r = _decode(bcur, writer_schema, names)
+            r = avro_decode(bcur, writer_schema, names)
             rows.append(tuple(_convert(r.get(f["name"]), f["type"])
                               for f in out_fields))
         return pd.DataFrame(rows, columns=out_names)
@@ -802,7 +650,7 @@ def split_frames(p: str, start: int, end: int, canon: str,
 
     file_size = os.path.getsize(p)
     with open(p, "rb") as fh:
-        m, sync, header_end = _read_header(fh)
+        m, sync, header_end = read_header(fh)
         if _json.dumps(_json.loads(
                 m["avro.schema"].decode("utf-8")),
                 sort_keys=True) != canon:
@@ -812,8 +660,8 @@ def split_frames(p: str, start: int, end: int, canon: str,
                 "mixed-schema reads are refused")
         codec = m.get("avro.codec", b"null").decode("utf-8")
         pending, pending_bytes = [], 0
-        for n, body in _split_blocks(fh, sync, codec, start, end,
-                                     header_end, file_size):
+        for n, body in read_blocks(fh, sync, codec, start, end,
+                                   header_end, file_size):
             if not n:
                 continue
             pending.append(block_df(body, n))
@@ -903,10 +751,6 @@ def _avro_schema_of(spark_schema, force_required: bool) -> dict:
     return {"type": "record", "name": "row", "fields": fields}
 
 
-_WRITE_CODECS = ("null", "deflate", "snappy", "zstandard",
-                 "bzip2", "xz")
-
-
 def write_avro(df: DataFrame, path: str,
                force_required: bool = False,
                codec: str = "null",
@@ -930,10 +774,10 @@ def write_avro(df: DataFrame, path: str,
     set."""
     import uuid as _uuid
 
-    if codec not in _WRITE_CODECS:
+    if codec not in BLOCK_CODECS:
         raise ValueError(
             f"avro sink: unsupported codec {codec!r} "
-            f"({'/'.join(_WRITE_CODECS)})")
+            f"({'/'.join(BLOCK_CODECS)})")
 
     schema = _avro_schema_of(df.schema, force_required)
     os.makedirs(path, exist_ok=True)
@@ -965,55 +809,16 @@ def encode_container(pdfs, schema: dict, codec: str = "null",
     ~``block_bytes`` (default 4 MiB): keeps every block inside the
     vectorized reader's size cap and bounds per-block decode memory,
     like production writers' sync-interval defaults."""
-    import json as _json
     import uuid as _uuid
 
-    from ..storage.iceberg_write import _avro_encode, _zigzag
-
-    canon = _json.dumps(schema).encode()
     fields = [(f["name"], f["type"]) for f in schema["fields"]]
     sync = _uuid.uuid4().bytes
-    out = bytearray(b"Obj\x01")
-    out += _avro_encode(
-        {"avro.schema": canon, "avro.codec": codec.encode()},
-        {"type": "map", "values": "bytes"})
-    out += sync
+    out = bytearray(container_header(schema, codec, sync))
     n_total = 0
 
     def flush(n, body):
         nonlocal n_total
-        body = bytes(body)
-        if codec == "deflate":
-            import zlib as _zlib
-            co = _zlib.compressobj(6, _zlib.DEFLATED, -15)
-            body = co.compress(body) + co.flush()
-        elif codec == "snappy":
-            import zlib as _zlib
-
-            import pyarrow as pa
-            crc = _zlib.crc32(body) & 0xFFFFFFFF
-            comp = pa.Codec("snappy").compress(body)
-            comp = comp.to_pybytes() if hasattr(comp, "to_pybytes") \
-                else bytes(comp)
-            body = comp + crc.to_bytes(4, "big")
-        elif codec == "zstandard":
-            import pyarrow as pa
-            comp = pa.Codec("zstd").compress(body)
-            comp = comp.to_pybytes() if hasattr(comp, "to_pybytes") \
-                else bytes(comp)
-            if _zstd_frame_size(comp) != len(body):
-                raise ValueError(
-                    "avro sink: zstd frame lost its content size")
-            body = comp
-        elif codec == "bzip2":
-            import bz2 as _bz2
-            body = _bz2.compress(body)
-        elif codec == "xz":
-            import lzma as _lzma
-            body = _lzma.compress(body, format=_lzma.FORMAT_XZ)
-        elif codec != "null":
-            raise ValueError(f"avro sink: unsupported codec {codec!r}")
-        out.extend(_zigzag(n) + _zigzag(len(body)) + body + sync)
+        out.extend(container_block(n, body, codec, sync))
         n_total += n
 
     body = bytearray()
@@ -1035,7 +840,7 @@ def encode_container(pdfs, schema: dict, codec: str = "null",
                         f"avro sink: null in required column "
                         f"{name!r} (written with "
                         "force_required=True)")
-                body += _avro_encode(v, ftype)
+                body += avro_encode(v, ftype)
             n_block += 1
             if len(body) >= block_bytes:
                 flush(n_block, body)

@@ -59,6 +59,7 @@ from __future__ import annotations
 
 import builtins
 import json
+import math
 import os
 import re
 import shutil
@@ -68,6 +69,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .core import (NO_VALUES, footer_stats, may_match, publish_if_absent,
+                   zorder_cluster, zorder_proxy_sql)
 
 _LOG = "_delta_log"
 _CHECKPOINT_EVERY = 10
@@ -115,61 +119,77 @@ _ACTION_KINDS = ("protocol", "metaData", "add", "remove", "txn",
                  "domainMetadata")
 
 
-def _file_stats(path: str, fields: list[T.StructField]) -> str | None:
+def file_stats_json(path: str, fields: list[T.StructField]) -> str:
     """Per-file stats JSON for an add action (PROTOCOL.md Per-file
     Statistics): numRecords + min/maxValues/nullCount for top-level
     int/long/float/double/string/bool columns, read from the parquet
-    footer — so readers (ours and foreign) can skip files."""
-    import pyarrow.parquet as pq
-
-    try:
-        md = pq.ParquetFile(path).metadata
-    except Exception:
-        return None
-    want = {f.name for f in fields
+    footer (:func:`.core.footer_stats`) — so readers (ours and
+    foreign) can skip files.  Bounds JSON cannot carry (NaN,
+    infinities, undecodable strings) are left out: a column without
+    bounds is never skipped."""
+    want = [f.name for f in fields
             if isinstance(f.dataType, (T.IntegerType, T.LongType,
                                        T.FloatType, T.DoubleType,
-                                       T.StringType, T.BooleanType))}
+                                       T.StringType, T.BooleanType))]
+    rows, cols = footer_stats(path, want)
     mins: dict = {}
     maxs: dict = {}
-    nulls: dict = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if name not in want:
+    for name, st in cols.items():
+        lo, hi = st.min, st.max
+        if isinstance(lo, bytes):
+            try:
+                lo, hi = lo.decode(), hi.decode()
+            except UnicodeDecodeError:
                 continue
-            st = col.statistics
-            if st is None:
-                continue
-            nulls[name] = nulls.get(name, 0) + (st.null_count or 0)
-            if not st.has_min_max:
-                # a group without bounds makes the column unprunable
-                mins[name] = maxs[name] = None
-                continue
-            if mins.get(name, "absent") is None:
-                continue
-            lo, hi = st.min, st.max
-            if isinstance(lo, bytes):
-                try:
-                    lo, hi = lo.decode(), hi.decode()
-                except UnicodeDecodeError:
-                    mins[name] = maxs[name] = None
-                    continue
-            if name not in mins:
-                mins[name], maxs[name] = lo, hi
-            else:
-                mins[name] = min(mins[name], lo)
-                maxs[name] = max(maxs[name], hi)
-    stats = {"numRecords": md.num_rows,
-             "minValues": {k: v for k, v in mins.items()
-                           if v is not None},
-             "maxValues": {k: v for k, v in maxs.items()
-                           if v is not None},
-             "nullCount": nulls,
+        if lo is None or any(isinstance(v, float) and not math.isfinite(v)
+                             for v in (lo, hi)):
+            continue
+        mins[name], maxs[name] = lo, hi
+    stats = {"numRecords": rows,
+             "minValues": mins,
+             "maxValues": maxs,
+             "nullCount": {k: st.null_count for k, st in cols.items()
+                           if st.null_count is not None},
              "tightBounds": True}
     return json.dumps(stats)
+
+
+def add_bounds(add: dict, part_cols: list[str],
+               type_of: dict[str, T.DataType]) -> dict:
+    """{column: (lo, hi)} of an add action for :func:`.core.may_match`:
+    a partition column's value is both bounds (a null value is
+    :data:`.core.NO_VALUES`), other columns take their stats' min/max.
+    Anything unparseable is left out, which keeps the file."""
+    out: dict = {}
+    if add.get("stats"):
+        try:
+            stats = json.loads(add["stats"])
+        except (ValueError, TypeError):
+            stats = {}
+        lows = stats.get("minValues") or {}
+        highs = stats.get("maxValues") or {}
+        for col in lows.keys() & highs.keys():
+            lo, hi = lows[col], highs[col]
+            if isinstance(type_of.get(col), (T.FloatType, T.DoubleType)) \
+                    and isinstance(hi, (int, float)):
+                hi = float(hi)  # float bounds get float semantics
+            out[col] = (lo, hi)
+    pvals = add.get("partitionValues") or {}
+    for col in part_cols:
+        raw = pvals.get(col)
+        if raw is None:
+            out[col] = NO_VALUES
+            continue
+        dt = type_of.get(col)
+        try:
+            if isinstance(dt, (T.IntegerType, T.LongType)):
+                raw = int(raw)
+            elif isinstance(dt, (T.FloatType, T.DoubleType)):
+                raw = float(raw)
+        except ValueError:
+            continue
+        out[col] = (raw, raw)
+    return out
 
 
 def _add_may_match(add: dict, preds: list[tuple],
@@ -179,52 +199,8 @@ def _add_may_match(add: dict, preds: list[tuple],
     partitionValues or stats PROVE no row can satisfy every
     predicate.  Anything unparseable keeps the file (pruning is an
     optimization, never a filter)."""
-    def cast_pv(col, raw):
-        if raw is None:
-            return None
-        dt = type_of.get(col)
-        if isinstance(dt, (T.IntegerType, T.LongType)):
-            return int(raw)
-        if isinstance(dt, (T.FloatType, T.DoubleType)):
-            return float(raw)
-        return raw
+    return may_match(add_bounds(add, part_cols, type_of), preds)
 
-    stats = None
-    if add.get("stats"):
-        try:
-            stats = json.loads(add["stats"])
-        except (ValueError, TypeError):
-            stats = None
-    for col, op, lit in preds:
-        if col in part_cols:
-            try:
-                pv = cast_pv(col, (add.get("partitionValues")
-                                   or {}).get(col))
-            except (ValueError, TypeError):
-                continue
-            if pv is None:
-                # a null partition value satisfies no comparison
-                return False
-            ok = {"=": pv == lit, "<": pv < lit, "<=": pv <= lit,
-                  ">": pv > lit, ">=": pv >= lit}.get(op, True)
-            if not ok:
-                return False
-            continue
-        if not stats:
-            continue
-        lo = (stats.get("minValues") or {}).get(col)
-        hi = (stats.get("maxValues") or {}).get(col)
-        if lo is None or hi is None:
-            continue
-        if not isinstance(lit, type(lo)) and not (
-                isinstance(lit, (int, float))
-                and isinstance(lo, (int, float))):
-            continue  # mixed types: don't risk a wrong skip
-        ok = {"=": lo <= lit <= hi, "<": lo < lit, "<=": lo <= lit,
-              ">": hi > lit, ">=": hi >= lit}.get(op, True)
-        if not ok:
-            return False
-    return True
 
 _CM_PHYS = "delta.columnMapping.physicalName"
 
@@ -1445,43 +1421,25 @@ class DeltaTable:
                 else:
                     entry["modificationTime"] = now
                     entry["dataChange"] = True
-                    stats = _file_stats(
+                    entry["stats"] = file_stats_json(
                         final_abs,
                         [f for f in df.schema.fields
                          if f.name not in partition_by])
-                    if stats:
-                        entry["stats"] = stats
                 adds.append({action: entry})
         shutil.rmtree(tmp, ignore_errors=True)
         return adds
 
     def _commit(self, version: int, actions: list[dict]) -> None:
-        """Atomic commit: write to a temp file, rename into place.
-        An existing commit file means a concurrent writer won — raise
+        """Atomic commit: put-if-absent of the commit file
+        (:func:`.core.publish_if_absent`).  An existing commit file
+        means a concurrent writer won — raise
         :class:`DeltaConcurrentCommit` (the Delta optimistic-
         concurrency contract; ``write`` retries on it)."""
         final = _commit_path(self.path, version)
-        tmp = final + f".{uuid.uuid4().hex}.tmp"
-        os.makedirs(_log_dir(self.path), exist_ok=True)
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(json.dumps(a) for a in actions) + "\n")
-        # Put-if-absent: os.link raises FileExistsError atomically if
-        # the commit file already exists, so two writers racing on the
-        # same version can never both "win" — the loser gets
-        # DeltaConcurrentCommit and ``write`` retries at version+1.
-        # (An exists-check followed by os.replace is NOT atomic: both
-        # racers can pass the check and the second replace silently
-        # clobbers the first writer's committed actions.)
-        try:
-            os.link(tmp, final)
-        except FileExistsError:
+        text = "\n".join(json.dumps(a) for a in actions) + "\n"
+        if not publish_if_absent(final, text):
             raise DeltaConcurrentCommit(
                 f"concurrent Delta commit at version {version}")
-        finally:
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
         if version % _CHECKPOINT_EVERY == 0 and version > 0:
             self._write_checkpoint(version)
 
@@ -2631,7 +2589,7 @@ class DeltaTable:
         ``zorder_by`` is the multi-dimensional version (OPTIMIZE
         ZORDER BY): quantile-binned Morton interleaving clusters
         every listed column at once, so stats prune predicates on
-        ANY of them (see :func:`_zorder_cluster`).  Mutually
+        ANY of them (see :func:`.core.zorder_cluster`).  Mutually
         exclusive with ``sort_by``.
 
         ``incremental=True`` (with ``zorder_by``) rewrites ONLY the
@@ -2673,7 +2631,7 @@ class DeltaTable:
             # type support fails fast on the driver, pre-rename
             for f in data_fields:
                 if f.name in zorder_by:
-                    _zorder_proxy_sql(f.name, f.dataType)
+                    zorder_proxy_sql(f.name, f.dataType)
         # column-mapped: compact entirely in the PHYSICAL world —
         # read physical columns, re-stage physical columns — so
         # files, stats, and partitionValues stay physically keyed
@@ -2745,7 +2703,7 @@ class DeltaTable:
             total = sum(f.get("size") or 0 for f in fs)
             nparts = max(1, math.ceil(total / target_file_bytes))
             if zorder_by:
-                df = _zorder_cluster(
+                df = zorder_cluster(
                     df, zorder_by,
                     {f.name: f.dataType for f in data_schema.fields},
                     nparts)
@@ -2972,96 +2930,6 @@ class DeltaTable:
         with open(os.path.join(_log_dir(self.path),
                                "_last_checkpoint"), "w") as fh:
             json.dump({"version": version, "size": len(rows)}, fh)
-
-
-def _zorder_proxy_sql(col: str, dt: T.DataType) -> str:
-    """An order-preserving DOUBLE proxy for a Z-ORDER column.  Only
-    the RELATIVE order matters (values feed quantile binning), so
-    lossy mappings are fine as long as they are monotonic: strings
-    map through their first 4 UTF-8 bytes as a big-endian integer,
-    timestamps through epoch seconds."""
-    q = f"`{col}`"
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType,
-                       T.LongType, T.FloatType, T.DoubleType,
-                       T.DecimalType)):
-        return f"CAST({q} AS DOUBLE)"
-    if isinstance(dt, T.DateType):
-        return f"CAST(datediff({q}, DATE'1970-01-01') AS DOUBLE)"
-    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-        return f"CAST(CAST({q} AS TIMESTAMP) AS DOUBLE)"
-    if isinstance(dt, T.StringType):
-        # rpad to exactly 4 bytes so short strings stay monotone
-        # against longer ones sharing their prefix ('a' must bin
-        # BELOW 'a~~~': 0x61000000 < 0x617E7E7E)
-        return ("CAST(CAST(conv(hex(rpad(substring(CAST(" + q +
-                " AS BINARY), 1, 4), 4, X'00')), 16, 10) "
-                "AS BIGINT) AS DOUBLE)")
-    raise ValueError(
-        f"zorder_by column {col!r} has unsupported type "
-        f"{dt.simpleString()} (numeric, decimal, date, timestamp "
-        "and string are supported)")
-
-
-_Z_BITS = 8  # 256 quantile bins per dimension
-
-
-def _zorder_cluster(df, zcols: list[str],
-                    type_of: dict[str, "T.DataType"],
-                    nparts: int):
-    """Multi-dimensional Z-ORDER clustering for OPTIMIZE: each
-    column is quantile-binned into 256 buckets (percentile_approx
-    boundaries — ONE extra aggregation job over the group, adapting
-    to the actual distribution, never min/max linear bins that
-    collapse under skew), bucket bits are Morton-interleaved into a
-    single bigint key, and the rewrite range-partitions + sorts on
-    that key.  Every output file then covers a narrow hyper-rectangle
-    in ALL clustering dimensions, so per-file min/max stats prune
-    predicates on ANY of them — the property a lexicographic
-    sort_by only gives the leading column.  Clustering placement
-    does not need to be deterministic (file contents and stats stay
-    exact either way); bit budget caps the dimensions at 7
-    (7 cols x 8 bits < the bigint sign bit)."""
-    import math
-
-    if len(zcols) > 7:
-        raise ValueError("zorder_by supports at most 7 columns "
-                         f"(got {len(zcols)})")
-    d = len(zcols)
-    fracs = [i / (1 << _Z_BITS) for i in range(1, 1 << _Z_BITS)]
-    proxies = [_zorder_proxy_sql(c, type_of[c]) for c in zcols]
-    bounds = df.agg(*[
-        F.percentile_approx(F.expr(px), fracs, 10000).alias(f"b{i}")
-        for i, px in enumerate(proxies)]).first()
-    # bind each proxy as a column BEFORE the boundary filter: the
-    # lambda references it once per boundary element, and an inlined
-    # expression (for strings: conv(hex(rpad(substring(...))))) would
-    # re-evaluate ~255x per row — the measured inline-HOF trap
-    df = df.withColumns({f"__zp{i}": F.expr(px)
-                         for i, px in enumerate(proxies)})
-    bucket_cols = {}
-    for i in range(d):
-        # non-finite boundaries would pretty-print as inf/nan and
-        # fail SQL analysis; dropping them is sound (an inf value
-        # compares above every finite boundary -> last bucket, a
-        # NaN proxy fails every comparison -> bucket 0)
-        bs = [float(v) for v in (bounds[f"b{i}"] or [])
-              if v is not None and math.isfinite(float(v))]
-        arr = ("CAST(array() AS ARRAY<DOUBLE>)" if not bs else
-               "array(" + ", ".join(f"CAST({v!r} AS DOUBLE)"
-                                    for v in bs) + ")")
-        # NULL proxy -> lambda NULL -> filtered out -> bucket 0
-        bucket_cols[f"__zb{i}"] = F.expr(
-            f"size(filter({arr}, b -> b <= __zp{i}))")
-    df = df.withColumns(bucket_cols)
-    morton = " + ".join(
-        f"shiftleft(shiftright(CAST(__zb{i} AS BIGINT), {j}) & 1, "
-        f"{j * d + i})"
-        for i in range(d) for j in range(_Z_BITS))
-    df = df.withColumn("__zm", F.expr(morton))
-    return (df.repartitionByRange(nparts, "__zm")
-            .sortWithinPartitions("__zm")
-            .drop("__zm", *bucket_cols,
-                  *[f"__zp{i}" for i in range(d)]))
 
 
 def maybe_optimize_delta(spark: SparkSession, path: str,

@@ -11,10 +11,9 @@ only:
   2 — current snapshot or ``snapshot_id`` time travel;
 - **manifest list + manifests**: Apache Avro object-container files
   (magic ``Obj\\x01``, header metadata map, sync-delimited blocks),
-  decoded by a from-scratch generic Avro reader driven by the
+  decoded by the storage core's generic Avro reader driven by the
   embedded writer schema (:func:`avro_read`) — zigzag varints,
-  blocked arrays/maps, unions, nested records, null/deflate codecs
-  (snappy via pyarrow when available);
+  blocked arrays/maps, unions, nested records, every Avro codec;
 - **schema**: Iceberg JSON schema converted to a Spark
   ``StructType`` (primitives, decimal, struct/list/map);
 - **scan**: the live data-file set (``status != DELETED`` entries,
@@ -47,149 +46,31 @@ format; this backs SURVEY §2 OP-SRC interop at 100 TB scale.
 
 from __future__ import annotations
 
+import io
 import json
 import os
 import re
 import struct
-import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-_AVRO_MAGIC = b"Obj\x01"
-
+from .core import (Cursor, avro_decode, may_match, read_blocks,
+                   read_header)
 
 # ------------------------------------------------------------------ avro
 
-class _Cursor:
-    __slots__ = ("buf", "pos")
-
-    def __init__(self, buf: bytes):
-        self.buf = buf
-        self.pos = 0
-
-    def read(self, n: int) -> bytes:
-        b = self.buf[self.pos:self.pos + n]
-        if len(b) != n:
-            raise ValueError("avro: truncated input")
-        self.pos += n
-        return b
-
-    def read_long(self) -> int:
-        """Zigzag varint (Avro spec 'Binary encoding / primitives')."""
-        shift = acc = 0
-        while True:
-            (b,) = self.read(1)
-            acc |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-        return (acc >> 1) ^ -(acc & 1)
-
-
-def _resolve_named(schema, names):
-    if isinstance(schema, str) and schema in names:
-        return names[schema]
-    return schema
-
-
-def _decode(cur: _Cursor, schema, names: dict):
-    """Decode one datum per the writer schema (Avro 1.11 binary
-    encoding).  ``names`` carries previously defined named types so
-    references decode correctly."""
-    schema = _resolve_named(schema, names)
-    if isinstance(schema, list):  # union: branch index then value
-        idx = cur.read_long()
-        return _decode(cur, schema[idx], names)
-    if isinstance(schema, str):
-        t = schema
-        if t == "null":
-            return None
-        if t == "boolean":
-            return cur.read(1) != b"\x00"
-        if t in ("int", "long"):
-            return cur.read_long()
-        if t == "float":
-            return struct.unpack("<f", cur.read(4))[0]
-        if t == "double":
-            return struct.unpack("<d", cur.read(8))[0]
-        if t == "bytes":
-            return cur.read(cur.read_long())
-        if t == "string":
-            return cur.read(cur.read_long()).decode("utf-8")
-        raise ValueError(f"avro: unknown primitive {t!r}")
-    t = schema["type"]
-    if t == "record":
-        if schema.get("name"):
-            names[schema["name"]] = schema
-        return {f["name"]: _decode(cur, f["type"], names)
-                for f in schema["fields"]}
-    if t == "enum":
-        if schema.get("name"):
-            names[schema["name"]] = schema
-        return schema["symbols"][cur.read_long()]
-    if t == "fixed":
-        if schema.get("name"):
-            names[schema["name"]] = schema
-        return cur.read(schema["size"])
-    if t == "array":
-        out = []
-        while True:
-            n = cur.read_long()
-            if n == 0:
-                return out
-            if n < 0:  # block with byte-size prefix
-                n = -n
-                cur.read_long()
-            for _ in range(n):
-                out.append(_decode(cur, schema["items"], names))
-    if t == "map":
-        out = {}
-        while True:
-            n = cur.read_long()
-            if n == 0:
-                return out
-            if n < 0:
-                n = -n
-                cur.read_long()
-            for _ in range(n):
-                k = cur.read(cur.read_long()).decode("utf-8")
-                out[k] = _decode(cur, schema["values"], names)
-    if t in ("null", "boolean", "int", "long", "float", "double",
-             "bytes", "string"):
-        return _decode(cur, t, names)  # {"type": "long"} wrapper form
-    raise ValueError(f"avro: unsupported schema {t!r}")
-
-
 def avro_blocks(payload: bytes):
-    """Container-level decode: returns ``(header_metadata,
-    [(record_count, decompressed_block_bytes), ...])``.  null and
-    deflate codecs via stdlib; snappy through pyarrow when present.
-    The per-datum decode is left to the caller — the Avro source's
-    vectorized path consumes whole blocks with numpy instead of
-    walking them byte-by-byte."""
-    cur = _Cursor(payload)
-    if cur.read(4) != _AVRO_MAGIC:
-        raise ValueError("not an Avro object-container file")
-    meta_schema = {"type": "map", "values": "bytes"}
-    meta = _decode(cur, meta_schema, {})
-    sync = cur.read(16)
+    """Container-level decode of a whole file: returns
+    ``(header_metadata, [(record_count, decompressed_block_bytes),
+    ...])``.  The per-datum decode is left to the caller — the Avro
+    source's vectorized path consumes whole blocks with numpy instead
+    of walking them byte-by-byte."""
+    fh = io.BytesIO(payload)
+    meta, sync, header_end = read_header(fh)
     codec = meta.get("avro.codec", b"null").decode("utf-8")
-    blocks = []
-    while cur.pos < len(cur.buf):
-        n = cur.read_long()
-        size = cur.read_long()
-        block = cur.read(size)
-        if codec == "deflate":
-            block = zlib.decompress(block, -15)
-        elif codec == "snappy":
-            block = _snappy(block)
-        elif codec != "null":
-            raise ValueError(f"avro: unsupported codec {codec!r}")
-        if cur.read(16) != sync:
-            raise ValueError("avro: sync marker mismatch")
-        blocks.append((n, block))
-    return meta, blocks
+    return meta, list(read_blocks(fh, sync, codec, 0, len(payload),
+                                  header_end, len(payload)))
 
 
 def avro_read(payload: bytes) -> tuple[dict, list]:
@@ -199,32 +80,11 @@ def avro_read(payload: bytes) -> tuple[dict, list]:
     schema = json.loads(meta["avro.schema"].decode("utf-8"))
     records = []
     for n, block in blocks:
-        bcur = _Cursor(block)
+        bcur = Cursor(block)
         names: dict = {}
         for _ in range(n):
-            records.append(_decode(bcur, schema, names))
+            records.append(avro_decode(bcur, schema, names))
     return meta, records
-
-
-def _snappy(block: bytes) -> bytes:
-    """Avro-snappy blocks: raw snappy body + big-endian CRC32 of the
-    UNCOMPRESSED data.  Raw snappy's leading varint is the
-    uncompressed length, which pyarrow's decompressor needs."""
-    import pyarrow as pa
-    body, crc = block[:-4], block[-4:]
-    size = shift = i = 0
-    while True:
-        b = body[i]
-        size |= (b & 0x7F) << shift
-        i += 1
-        if not b & 0x80:
-            break
-        shift += 7
-    out = pa.decompress(body, decompressed_size=size, codec="snappy")
-    data = out.to_pybytes() if hasattr(out, "to_pybytes") else bytes(out)
-    if struct.pack(">I", zlib.crc32(data) & 0xFFFFFFFF) != crc:
-        raise ValueError("avro: snappy block CRC mismatch")
-    return data
 
 
 # ------------------------------------------------------------------ schema
@@ -335,34 +195,41 @@ def _lit_physical(type_name: str, lit):
     return lit
 
 
+def decoded_bounds(entry: dict, types: dict) -> dict:
+    """{field id: (lower, upper)} of a manifest entry's column bounds
+    for the field ids in ``types`` ({field id: Iceberg type name}) —
+    undecodable or missing sides are None."""
+    lowers = _bounds_map(entry.get("lower_bounds"))
+    uppers = _bounds_map(entry.get("upper_bounds"))
+    return {fid: (_decode_bound(t, lowers.get(fid)),
+                  _decode_bound(t, uppers.get(fid)))
+            for fid, t in types.items()}
+
+
 def _file_may_match(df_entry: dict, preds, field_id: dict,
                     field_type: dict) -> bool:
     """Conservative column-bound pruning (Iceberg spec 'Scan
     Planning'): a file is skipped ONLY when its decoded
     lower/upper_bounds prove a predicate false; missing stats,
     unknown types, or undecodable bounds keep the file."""
-    lowers = _bounds_map(df_entry.get("lower_bounds"))
-    uppers = _bounds_map(df_entry.get("upper_bounds"))
-    for col, op, raw_lit in preds:
-        fid = field_id.get(col)
-        if fid is None:
-            continue
-        lit = _lit_physical(field_type.get(col), raw_lit)
-        lo = _decode_bound(field_type.get(col), lowers.get(fid))
-        hi = _decode_bound(field_type.get(col), uppers.get(fid))
-        try:
-            if op == "=" and ((lo is not None and lit < lo)
-                              or (hi is not None and lit > hi)):
-                return False
-            if op in (">", ">=") and hi is not None and (
-                    lit > hi if op == ">=" else lit >= hi):
-                return False
-            if op in ("<", "<=") and lo is not None and (
-                    lit < lo if op == "<=" else lit <= lo):
-                return False
-        except TypeError:  # incomparable literal: stay conservative
-            continue
-    return True
+    cols = {c for c, _, _ in preds if c in field_id}
+    bounds = decoded_bounds(df_entry, {field_id[c]: field_type.get(c)
+                                       for c in cols})
+    return may_match(bounds, [
+        (field_id[c], op, _lit_physical(field_type.get(c), lit))
+        for c, op, lit in preds if c in cols])
+
+
+def prune_files(files: list[dict], preds, ice_schema: dict) -> list[dict]:
+    """The data files whose column bounds may satisfy every predicate
+    (:func:`_file_may_match` against ``ice_schema``'s field ids)."""
+    if not preds:
+        return files
+    field_id = {f["name"]: f["id"] for f in ice_schema["fields"]}
+    field_type = {f["name"]: f["type"] for f in ice_schema["fields"]
+                  if isinstance(f["type"], str)}
+    return [f for f in files
+            if _file_may_match(f, preds, field_id, field_type)]
 
 
 def _partition_specs(md: dict) -> dict[int, list[dict]]:
@@ -480,9 +347,10 @@ def _manifest_may_match(m: dict, preds, specs: dict,
             transform, type_name)
         if dec_type is None:
             continue
-        strict = transform == "identity"
+        weak = {} if transform == "identity" else {">": ">=", "<": "<="}
         lo = _decode_bound(dec_type, summ.get("lower_bound"))
         hi = _decode_bound(dec_type, summ.get("upper_bound"))
+        tpreds = []
         for col, op, lit in preds:
             if col != name:
                 continue
@@ -490,21 +358,12 @@ def _manifest_may_match(m: dict, preds, specs: dict,
                 continue  # bucket: only equality prunes soundly
             try:
                 plit = to_part(lit)
-                if plit is None:
-                    continue
-                if op == "=" and ((lo is not None and plit < lo)
-                                  or (hi is not None and plit > hi)):
-                    return False
-                if op in (">", ">=") and hi is not None and (
-                        plit > hi if (op == ">=" or not strict)
-                        else plit >= hi):
-                    return False
-                if op in ("<", "<=") and lo is not None and (
-                        plit < lo if (op == "<=" or not strict)
-                        else plit <= lo):
-                    return False
             except TypeError:
                 continue
+            if plit is not None:
+                tpreds.append((name, weak.get(op, op), plit))
+        if not may_match({name: (lo, hi)}, tpreds):
+            return False
     return True
 
 
@@ -767,15 +626,7 @@ class IcebergTable:
         filters.  Shared by :meth:`read` and :meth:`incremental`."""
         ice_schema = self._current_schema(md)
         schema = _to_spark_schema(ice_schema)
-        if preds:
-            field_id = {f["name"]: f["id"]
-                        for f in ice_schema["fields"]}
-            field_type = {f["name"]: f["type"]
-                          for f in ice_schema["fields"]
-                          if isinstance(f["type"], str)}
-            files = [f for f in files
-                     if _file_may_match(f, preds, field_id,
-                                        field_type)]
+        files = prune_files(files, preds, ice_schema)
         if not files:
             return spark.createDataFrame([], schema)
         by_fmt: dict[str, list[str]] = {}

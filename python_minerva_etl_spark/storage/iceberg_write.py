@@ -3,9 +3,9 @@
 Mirrors the Delta writer's conformance discipline
 (``storage/delta.py``): data files are staged by a distributed Spark
 parquet write and renamed into ``data/``, metadata is committed
-CAS-style (``os.link`` put-if-absent on the next ``v<N>.metadata.json``
-— two racing writers can never both win a version), and every byte of
-Avro written here follows the published specs:
+CAS-style (put-if-absent on the next ``v<N>.metadata.json`` — two
+racing writers can never both win a version), and every byte of Avro
+written here follows the published specs:
 
 - Avro 1.11 object container files (header map, sync markers,
   zigzag-varint longs) for manifests and manifest lists;
@@ -40,7 +40,11 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .iceberg import IcebergTable, _localize, _to_spark_schema
+from .core import (avro_encode, container_block, container_header,
+                   footer_stats, publish_if_absent, zorder_cluster,
+                   zorder_proxy_sql)
+from .iceberg import (IcebergTable, _localize, _to_spark_schema,
+                      prune_files)
 
 
 class IcebergConcurrentCommit(FileExistsError):
@@ -50,75 +54,12 @@ class IcebergConcurrentCommit(FileExistsError):
 # ------------------------------------------------------------ avro writer
 
 
-def _zigzag(n: int) -> bytes:
-    u = (n << 1) ^ (n >> 63)
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _avro_encode(value, schema) -> bytes:
-    if isinstance(schema, list):  # union — null first per our schemas
-        if value is None:
-            return _zigzag(schema.index("null"))
-        idx = next(i for i, s in enumerate(schema) if s != "null")
-        return _zigzag(idx) + _avro_encode(value, schema[idx])
-    if isinstance(schema, str):
-        if schema == "null":
-            return b""
-        if schema == "boolean":
-            return b"\x01" if value else b"\x00"
-        if schema in ("int", "long"):
-            return _zigzag(int(value))
-        if schema == "float":
-            return struct.pack("<f", value)
-        if schema == "double":
-            return struct.pack("<d", value)
-        if schema == "bytes":
-            return _zigzag(len(value)) + bytes(value)
-        if schema == "string":
-            b = value.encode("utf-8")
-            return _zigzag(len(b)) + b
-        raise ValueError(f"avro encode: unsupported type {schema!r}")
-    t = schema["type"]
-    if t == "record":
-        return b"".join(_avro_encode(value.get(f["name"]), f["type"])
-                        for f in schema["fields"])
-    if t == "array":
-        if not value:
-            return _zigzag(0)
-        return (_zigzag(len(value))
-                + b"".join(_avro_encode(v, schema["items"])
-                           for v in value)
-                + _zigzag(0))
-    if t == "map":
-        if not value:
-            return _zigzag(0)
-        body = b"".join(_avro_encode(k, "string")
-                        + _avro_encode(v, schema["values"])
-                        for k, v in value.items())
-        return _zigzag(len(value)) + body + _zigzag(0)
-    raise ValueError(f"avro encode: unsupported type {t!r}")
-
-
 def _avro_file(schema: dict, records: list) -> bytes:
     """Avro 1.11 object container file, null codec, one block."""
     sync = uuid.uuid4().bytes
-    out = bytearray(b"Obj\x01")
-    out += _avro_encode(
-        {"avro.schema": json.dumps(schema).encode(),
-         "avro.codec": b"null"},
-        {"type": "map", "values": "bytes"})
-    out += sync
-    body = b"".join(_avro_encode(r, schema) for r in records)
-    out += _zigzag(len(records)) + _zigzag(len(body)) + body + sync
-    return bytes(out)
+    body = b"".join(avro_encode(r, schema) for r in records)
+    return (container_header(schema, "null", sync)
+            + container_block(len(records), body, "null", sync))
 
 
 # ------------------------------------------------ spark -> iceberg schema
@@ -196,7 +137,9 @@ def _micros(v) -> int:
         return v
     import datetime
     epoch = datetime.datetime(1970, 1, 1, tzinfo=v.tzinfo)
-    return int((v - epoch).total_seconds() * 1_000_000)
+    # exact integer micros: float seconds lose the last microsecond
+    # of far-from-epoch values, and a bound must never shrink
+    return (v - epoch) // datetime.timedelta(microseconds=1)
 
 
 # --------------------------------------------- partition transforms
@@ -542,42 +485,36 @@ def _spec_part_field(spec_fields: list[dict],
 
 def _file_bounds(parquet_path: str, ice_schema: dict
                  ) -> tuple[list, list]:
-    """Per-column lower/upper bounds from the parquet footer's
-    row-group statistics, encoded per the Iceberg single-value
+    """Per-column lower/upper bounds from the parquet footer
+    (:func:`.core.footer_stats`), encoded per the Iceberg single-value
     serialization, as [{key: field-id, value: bytes}] logical maps.
-    Columns without stats (or of non-encodable types) are simply
-    omitted — the reader treats missing bounds conservatively."""
-    import pyarrow.parquet as pq
-
+    Unbounded columns (or non-encodable types) are simply omitted —
+    the reader treats missing bounds conservatively."""
     by_name = {f["name"]: f for f in ice_schema["fields"]
                if isinstance(f["type"], str)}
-    md = pq.ParquetFile(parquet_path).metadata
-    mins: dict[str, object] = {}
-    maxs: dict[str, object] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            st = col.statistics
-            if (name not in by_name or st is None
-                    or not st.has_min_max):
-                continue
-            lo, hi = st.min, st.max
-            mins[name] = lo if name not in mins else min(mins[name], lo)
-            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
+    _, stats = footer_stats(parquet_path, by_name)
     lower, upper = [], []
-    for name, lo in mins.items():
+    for name, st in stats.items():
         enc = _BOUND_ENCODERS.get(by_name[name]["type"])
-        if enc is None:
+        if enc is None or st.min is None:
             continue
         try:
-            lower.append({"key": by_name[name]["id"], "value": enc(lo)})
+            lower.append({"key": by_name[name]["id"],
+                          "value": enc(st.min)})
             upper.append({"key": by_name[name]["id"],
-                          "value": enc(maxs[name])})
+                          "value": enc(st.max)})
         except (struct.error, ValueError, TypeError):
             continue
     return lower, upper
+
+
+def bound_entries(data_files: list[dict], ice_schema: dict) -> None:
+    """Attach footer-derived ``lower_bounds``/``upper_bounds`` to
+    freshly staged data-file entries."""
+    for f in data_files:
+        lo, hi = _file_bounds(f["file_path"], ice_schema)
+        f["lower_bounds"] = lo or None
+        f["upper_bounds"] = hi or None
 
 
 # --------------------------------------------------------- avro schemas
@@ -809,7 +746,7 @@ def write_iceberg(spark: SparkSession, df: DataFrame, path: str,
 
     Commit protocol: stage data files once, then CAS the metadata —
     read the current version, write ``v<N+1>.metadata.json`` via
-    ``os.link`` put-if-absent, and on :class:`IcebergConcurrentCommit`
+    put-if-absent, and on :class:`IcebergConcurrentCommit`
     re-read and retry with the already-staged files (the Iceberg
     optimistic-concurrency contract; data files are immutable and
     uniquely named, so a retry never rewrites them).
@@ -822,10 +759,7 @@ def write_iceberg(spark: SparkSession, df: DataFrame, path: str,
     ice_schema, part = _precheck_append(path, df.schema, partition_by,
                                         merge_schema)
     data_files = _stage_data_files(df, path, part, ice_schema)
-    for f in data_files:
-        lo, hi = _file_bounds(f["file_path"], ice_schema)
-        f["lower_bounds"] = lo or None
-        f["upper_bounds"] = hi or None
+    bound_entries(data_files, ice_schema)
     _commit_staged(path, data_files, ice_schema, part,
                    max_commit_attempts,
                    df_schema=df.schema if merge_schema else None)
@@ -852,10 +786,7 @@ def overwrite_iceberg(spark: SparkSession, df: DataFrame, path: str,
         return
     ice_schema, part = _precheck_append(path, df.schema, partition_by)
     data_files = _stage_data_files(df, path, part, ice_schema)
-    for f in data_files:
-        lo, hi = _file_bounds(f["file_path"], ice_schema)
-        f["lower_bounds"] = lo or None
-        f["upper_bounds"] = hi or None
+    bound_entries(data_files, ice_schema)
     table = IcebergTable(path)
     for _ in range(max_commit_attempts):
         md = table.metadata()
@@ -1143,7 +1074,7 @@ def _cas_metadata(table: IcebergTable, new_md: dict,
                   base_version: int,
                   cleanup: tuple[str, ...] = ()) -> None:
     """Commit ``new_md`` as ``v<base_version+1>.metadata.json`` via
-    ``os.link`` put-if-absent (two racers can never both win the
+    :func:`.core.publish_if_absent` (two racers can never both win the
     version) and refresh ``version-hint.text``.  On a lost race the
     freshly-written ``cleanup`` files are removed and
     :class:`IcebergConcurrentCommit` raises.  The CAS target is
@@ -1153,12 +1084,7 @@ def _cas_metadata(table: IcebergTable, new_md: dict,
     mdir = os.path.join(table.path, "metadata")
     next_v = base_version + 1
     final = os.path.join(mdir, f"v{next_v}.metadata.json")
-    tmp = final + f".{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(new_md, fh)
-    try:
-        os.link(tmp, final)  # atomic create-if-absent
-    except FileExistsError:
+    if not publish_if_absent(final, json.dumps(new_md)):
         for p in cleanup:
             try:
                 os.remove(p)
@@ -1166,11 +1092,6 @@ def _cas_metadata(table: IcebergTable, new_md: dict,
                 pass
         raise IcebergConcurrentCommit(
             f"concurrent Iceberg commit at version {next_v}")
-    finally:
-        try:
-            os.remove(tmp)
-        except OSError:
-            pass
     with open(os.path.join(mdir, "version-hint.text"), "w") as fh:
         fh.write(str(next_v))
 
@@ -1214,24 +1135,15 @@ def _live_rows(spark: SparkSession, table: IcebergTable, md: dict,
     Returns ``(None, [])`` when no live data file can match."""
     from pyspark.sql import functions as F
 
-    from .iceberg import _file_may_match
-
     files, delete_files = table._data_files(
         table._snapshot(md, None), list(preds), md)
     if not files:
         return None, []
     ice_schema = table._current_schema(md)
     schema = _to_spark_schema(ice_schema)
-    if preds:
-        field_id = {f["name"]: f["id"]
-                    for f in ice_schema["fields"]}
-        field_type = {f["name"]: f["type"]
-                      for f in ice_schema["fields"]
-                      if isinstance(f["type"], str)}
-        files = [f for f in files
-                 if _file_may_match(f, preds, field_id, field_type)]
-        if not files:
-            return None, []
+    files = prune_files(files, preds, ice_schema)
+    if not files:
+        return None, []
     fmts = {(f.get("file_format") or "PARQUET").upper()
             for f in files}
     if fmts - {"PARQUET"}:
@@ -1339,13 +1251,6 @@ def _part_info(md: dict, ice_schema: dict) -> "_PartField | None":
     if not spec_fields:
         return None
     return _spec_part_field(spec_fields, ice_schema)
-
-
-def _bound_entries(data_files: list[dict], ice_schema: dict) -> None:
-    for f in data_files:
-        lo, hi = _file_bounds(f["file_path"], ice_schema)
-        f["lower_bounds"] = lo or None
-        f["upper_bounds"] = hi or None
 
 
 def _commit_row_dml(table: IcebergTable, md: dict,
@@ -1702,7 +1607,7 @@ def update_iceberg(spark: SparkSession, path: str, set: dict,
               for f in schema.fields])
         data_entries = _stage_data_files(updated, path, part_info,
                                          ice_schema)
-        _bound_entries(data_entries, ice_schema)
+        bound_entries(data_entries, ice_schema)
     finally:
         matched.unpersist()
     _retry_row_dml(table, data_entries, del_entries, part_info,
@@ -1861,7 +1766,7 @@ def merge_iceberg(spark: SparkSession, path: str, source: DataFrame,
         if new_rows is not None and not new_rows.isEmpty():
             data_entries = _stage_data_files(
                 new_rows, path, part_info, ice_schema)
-            _bound_entries(data_entries, ice_schema)
+            bound_entries(data_entries, ice_schema)
     finally:
         if matched is not None:
             matched.unpersist()
@@ -1897,7 +1802,7 @@ def compact_iceberg(spark: SparkSession, path: str,
     ``zorder_by`` turns the pass into a multi-dimensional CLUSTERING
     rewrite (rewrite_data_files sort-order with a Z-curve): the
     shared quantile-binned Morton machinery (storage/delta.py
-    ``_zorder_cluster``) range-partitions the rewrite so each new
+    ``core.zorder_cluster``) range-partitions the rewrite so each new
     data file covers a narrow hyper-rectangle, and the per-file
     lower/upper bounds written into the manifest make the reader's
     ``where=`` file pruning effective on EVERY clustered column.
@@ -1936,8 +1841,6 @@ def compact_iceberg(spark: SparkSession, path: str,
     if zorder_by:
         import math
 
-        from .delta import _zorder_cluster, _zorder_proxy_sql
-
         type_of = {f.name: f.dataType
                    for f in _to_spark_schema(ice_schema).fields}
         bad = [c for c in zorder_by if c not in type_of]
@@ -1946,7 +1849,7 @@ def compact_iceberg(spark: SparkSession, path: str,
                 f"compact_iceberg zorder_by columns {bad} not in "
                 "the table schema")
         for c in zorder_by:
-            _zorder_proxy_sql(c, type_of[c])  # fail fast on types
+            zorder_proxy_sql(c, type_of[c])  # fail fast on types
         target = data_files
         if incremental:
             z = _last_zorder_snapshot(md, zorder_by)
@@ -1982,16 +1885,13 @@ def compact_iceberg(spark: SparkSession, path: str,
             total = sum(int(f.get("file_size_in_bytes") or 0)
                         for f in fs)
             nparts = max(1, math.ceil(total / target_file_bytes))
-            df = _zorder_cluster(df, zorder_by, type_of, nparts)
+            df = zorder_cluster(df, zorder_by, type_of, nparts)
             staged += _stage_data_files(df, path, part_info,
                                         ice_schema)
     else:
         df = table.read(spark)
         staged = _stage_data_files(df, path, part_info, ice_schema)
-    for f in staged:
-        lo, hi = _file_bounds(f["file_path"], ice_schema)
-        f["lower_bounds"] = lo or None
-        f["upper_bounds"] = hi or None
+    bound_entries(staged, ice_schema)
     for _ in range(max_commit_attempts):
         cur_md = table.metadata()
         cur = table._snapshot(cur_md, None)

@@ -15,9 +15,9 @@ dependency-free:
   (each manifest is a FULL snapshot: the list of data files that make
   up that version, with per-file min/max stats of the merge keys read
   from the parquet footers via pyarrow).
-* **Atomic commit** — the manifest is staged to a temp name and
-  published with ``os.link`` (fails with ``EEXIST`` if a concurrent
-  writer took the version number — POSIX gives test-and-set for free).
+* **Atomic commit** — the manifest is published put-if-absent
+  (:func:`.core.publish_if_absent`: fails if a concurrent writer took
+  the version number — POSIX ``link`` gives test-and-set for free).
   Readers see either the old snapshot or the new one, never a partial
   write; a crashed writer leaves only an unreferenced data dir that
   ``vacuum()`` removes.
@@ -48,7 +48,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+
+from .core import footer_stats, may_match, publish_if_absent
 
 
 class CommitConflict(RuntimeError):
@@ -87,43 +88,20 @@ def _canon_col(df: DataFrame, col: str):
 
 
 def _file_stats(path: str, key: list[str]) -> tuple[int, dict[str, list[Any]]]:
-    """(num_rows, per-key-column min/max) from the parquet footer —
-    no data pages are read."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-    out: dict[str, list[Any]] = {}
-    for col in key:
-        if col not in idx:
-            continue
-        lo = hi = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx[col]).statistics
-            if st is None or not st.has_min_max:
-                lo = hi = None
-                break
-            mn, mx = _canon(st.min), _canon(st.max)
-            lo = mn if lo is None or mn < lo else lo
-            hi = mx if hi is None or mx > hi else hi
-        if lo is not None:
-            out[col] = [lo, hi]
-    return md.num_rows, out
+    """(num_rows, per-key-column [min, max]) from the parquet footer
+    (:func:`.core.footer_stats`) — no data pages are read; unbounded
+    columns are left out."""
+    rows, cols = footer_stats(path, key)
+    return rows, {c: [_canon(cols[c].min), _canon(cols[c].max)]
+                  for c in key if c in cols and cols[c].min is not None}
 
 
 def _overlaps(stats: dict[str, list[Any]],
               envelope: dict[str, list[Any]]) -> bool:
-    """Conservative range-overlap test — missing stats count as overlap."""
-    for col, (blo, bhi) in envelope.items():
-        if col not in stats:
-            continue
-        flo, fhi = stats[col]
-        try:
-            if fhi < blo or bhi < flo:
-                return False
-        except TypeError:  # incomparable stat forms: stay conservative
-            continue
-    return True
+    """Conservative range-overlap test — the envelope is the
+    predicates ``lo <= col <= hi``; missing stats count as overlap."""
+    return may_match(stats, [(c, op, v) for c, (lo, hi) in envelope.items()
+                             for op, v in ((">=", lo), ("<=", hi))])
 
 
 _BLOOM_BITS = 2048
@@ -371,9 +349,10 @@ class SnapTable:
         ``maxRecordsPerFile`` cap from the PUBLISHED footer stats —
         bytes/row over the latest manifest's entries against a target
         file size (``spark.minerva.snaptable.targetFileBytes``,
-        default 128 MB) — so a skewed shuffle partition cannot write
-        one multi-GB file.  First write (no stats yet) and
-        empty-table edges return None (no cap).  The cap only SPLITS
+        default 128 MB; a value that is not an integer raises) — so a
+        skewed shuffle partition cannot write one multi-GB file.
+        First write (no stats yet) and empty-table edges return None
+        (no cap).  The cap only SPLITS
         oversized partitions; small-file coalescing stays AQE's job.
         """
         v = self.latest_version()
@@ -384,12 +363,14 @@ class SnapTable:
         byts = sum(e["bytes"] for e in entries)
         if rows <= 0 or byts <= 0:
             return None
+        raw = spark.conf.get("spark.minerva.snaptable.targetFileBytes",
+                             str(128 << 20))
         try:
-            target = int(spark.conf.get(
-                "spark.minerva.snaptable.targetFileBytes",
-                str(128 << 20)))
-        except Exception:
-            target = 128 << 20
+            target = int(raw)
+        except ValueError:
+            raise ValueError(
+                "spark.minerva.snaptable.targetFileBytes must be an "
+                f"integer byte count, got {raw!r}") from None
         if target <= 0:      # explicit off-switch
             return None
         return max(1, int(target * rows / byts))
@@ -421,17 +402,9 @@ class SnapTable:
     def _publish(self, manifest: dict, version: int) -> bool:
         """Atomically publish ``manifest`` as ``version``; False if a
         concurrent writer took that version number first."""
-        os.makedirs(self._mdir, exist_ok=True)
-        tmp = os.path.join(self._mdir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        try:
-            os.link(tmp, os.path.join(self._mdir, f"v{version:08d}.json"))
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            os.unlink(tmp)
+        return publish_if_absent(
+            os.path.join(self._mdir, f"v{version:08d}.json"),
+            json.dumps(manifest))
 
     def txns(self, version: int | None = None) -> dict[str, int]:
         """Writer-app -> last committed batch id, carried forward in

@@ -43,10 +43,7 @@ from pyspark.sql.datasource import (DataSource,
                                     InputPartition,
                                     WriterCommitMessage)
 
-
-def _opt(options: dict, name: str, default=None):
-    lowered = {str(k).lower(): v for k, v in options.items()}
-    return lowered.get(name.lower(), default)
+from . import option
 
 
 class _SplitPartition(InputPartition):
@@ -84,13 +81,13 @@ class _AvroPlanMixin:
     def _plan(self, options: dict):
         from ..sources.avro import plan_read
 
-        self.path = _opt(options, "path")
+        self.path = option(options, "path")
         if not self.path:
             raise ValueError("minerva_avro requires a path")
-        self.split_bytes = int(_opt(options, "split_bytes",
-                                    128 << 20))
-        self.batch_bytes = int(_opt(options, "batch_bytes",
-                                    64 << 20))
+        self.split_bytes = int(option(options, "split_bytes",
+                                      128 << 20))
+        self.batch_bytes = int(option(options, "batch_bytes",
+                                      64 << 20))
         (files, self.writer_schema, self.schema_, self.canon,
          self.plan_, self.plan_gen, self.colnames) = \
             plan_read(self.path)
@@ -179,13 +176,13 @@ class _AvroStreamReader(DataSourceStreamReader, _AvroPlanMixin):
 
     def __init__(self, options: dict):
         self._plan(options)
-        mft = _opt(options, "maxFilesPerTrigger")
+        mft = option(options, "maxFilesPerTrigger")
         self.max_files = int(mft) if mft is not None else None
         if self.max_files is not None and self.max_files < 1:
             raise ValueError(
                 "minerva_avro: maxFilesPerTrigger must be a "
                 f"positive integer, got {mft!r}")
-        mbt = _opt(options, "maxBytesPerTrigger")
+        mbt = option(options, "maxBytesPerTrigger")
         self.max_bytes = int(mbt) if mbt is not None else None
         if self.max_bytes is not None and self.max_bytes < 1:
             raise ValueError(
@@ -202,7 +199,7 @@ class _AvroStreamReader(DataSourceStreamReader, _AvroPlanMixin):
         # capping even the first run's cold backlog — see
         # admission.fresh_start_floor for the safety interlock.
         from .admission import attach_state, fresh_start_floor
-        opt = lambda n: _opt(options, n)  # noqa: E731
+        opt = lambda n: option(options, n)  # noqa: E731
         self._wm_state = attach_state(
             opt, "minerva_avro", self.path,
             self.max_files is not None or self.max_bytes is not None)
@@ -353,14 +350,14 @@ class _AvroWriter(DataSourceArrowWriter):
                 "minerva_avro writer is append-only "
                 "(mode('append')); a drop directory is never "
                 "rewritten in place")
-        self.path = _opt(options, "path")
+        self.path = option(options, "path")
         if not self.path:
             raise ValueError("minerva_avro requires a path")
-        self.codec = _opt(options, "codec", "deflate")
-        self.force_required = str(_opt(
+        self.codec = option(options, "codec", "deflate")
+        self.force_required = str(option(
             options, "force_required", "false")).lower() == "true"
-        self.block_bytes = int(_opt(options, "block_bytes",
-                                    4 << 20))
+        self.block_bytes = int(option(options, "block_bytes",
+                                      4 << 20))
         # fail fast on the driver: unsupported column types raise at
         # planning, before any executor work
         self.avro_schema = _avro_schema_of(schema,
@@ -527,7 +524,7 @@ class MinervaAvroDataSource(DataSource):
     def schema(self):
         from ..sources.avro import plan_read
 
-        path = _opt(dict(self.options), "path")
+        path = option(dict(self.options), "path")
         if not path:
             raise ValueError("minerva_avro requires a path")
         return plan_read(path)[2]

@@ -46,13 +46,7 @@ from pyspark.sql.datasource import (DataSource,
                                     WriterCommitMessage)
 
 from ..storage.delta import DeltaTable, _commit_path
-
-def _opt(options: dict, name: str, default=None):
-    """Spark normalizes reader option keys to lowercase before they
-    reach a Python data source — look keys up case-insensitively so
-    `.option("startingVersion", …)` works as documented."""
-    lowered = {str(k).lower(): v for k, v in options.items()}
-    return lowered.get(name.lower(), default)
+from . import option, preds_from_filters
 
 
 class _FilePartition(InputPartition):
@@ -305,13 +299,13 @@ def _check_supported(dt: DeltaTable, snap: dict):
 
 class _BatchReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.path = _opt(options, "path")
+        self.path = option(options, "path")
         if not self.path:
             raise ValueError("minerva_delta requires a path "
                              "(.load(path) or .option('path', …))")
         dt = DeltaTable(self.path)
-        vao = _opt(options, "versionAsOf")
-        tao = _opt(options, "timestampAsOf")
+        vao = option(options, "versionAsOf")
+        tao = option(options, "timestampAsOf")
         if vao is not None and tao is not None:
             raise ValueError("minerva_delta: pass versionAsOf OR "
                              "timestampAsOf, not both")
@@ -339,22 +333,21 @@ class _BatchReader(DataSourceReader):
         stats (min/max), exactly like ``DeltaTable.read(where=…)``.
         EVERY filter is handed back to Spark for post-scan
         evaluation — pushdown here is pruning, never filtering."""
-        from .iceberg_source import _preds_from_filters
-
-        self.preds = _preds_from_filters(
+        self.preds = preds_from_filters(
             filters, {f.name for f in self.schema_.fields})
         return filters
 
     def partitions(self):
         files = self.files
         if self.preds:
-            from ..storage.delta import _add_may_match
+            from ..storage.core import may_match
+            from ..storage.delta import add_bounds
 
             type_of = {f.name: f.dataType
                        for f in self.schema_.fields}
             files = [f for f in files
-                     if _add_may_match(f, self.preds,
-                                       self.part_cols, type_of)]
+                     if may_match(add_bounds(f, self.part_cols, type_of),
+                                  self.preds)]
         return [_FilePartition(self.table_path, f["path"],
                                f.get("partitionValues") or {},
                                f.get("deletionVector"), cm=self.cm)
@@ -388,14 +381,14 @@ class _CdfBatchReader(DataSourceReader):
     as do schema changes inside the range."""
 
     def __init__(self, options: dict):
-        self.path = _opt(options, "path")
+        self.path = option(options, "path")
         if not self.path:
             raise ValueError("minerva_delta requires a path")
         dt = DeltaTable(self.path)
         avail = dt.versions()
         if not avail:
             raise FileNotFoundError(f"no Delta log at {self.path!r}")
-        sv = _opt(options, "startingVersion")
+        sv = option(options, "startingVersion")
         if sv is None:
             # delta-spark's batch readChangeFeed errors without a
             # starting option; defaulting to 0 here would silently
@@ -405,7 +398,7 @@ class _CdfBatchReader(DataSourceReader):
                 "minerva_delta readChangeFeed requires "
                 "option('startingVersion', …)")
         start = int(sv)
-        endo = _opt(options, "endingVersion")
+        endo = option(options, "endingVersion")
         end = avail[-1] if endo is None else int(endo)
         snap = dt._replay(end)
         self.cm = _check_supported(dt, snap)
@@ -430,8 +423,6 @@ class _CdfBatchReader(DataSourceReader):
                T.StructField("_commit_timestamp", T.TimestampType())])
 
     def partitions(self):
-        from ..storage.delta import _CM_PHYS
-
         cm_ct = None
         if self.cm:
             cm_ct = (self.cm[0],
@@ -575,7 +566,7 @@ class _StreamReader(DataSourceStreamReader):
     means 'everything through commit N has been emitted'."""
 
     def __init__(self, options: dict):
-        self.path = _opt(options, "path")
+        self.path = option(options, "path")
         if not self.path:
             raise ValueError("minerva_delta requires a path")
         self.dt = DeltaTable(self.path)
@@ -586,8 +577,8 @@ class _StreamReader(DataSourceStreamReader):
             json.loads(meta["schemaString"]))
         self.part_cols = meta.get("partitionColumns") or []
         self.table_path = os.path.abspath(self.path)
-        sv = _opt(options, "startingVersion")
-        st = _opt(options, "startingTimestamp")
+        sv = option(options, "startingVersion")
+        st = option(options, "startingTimestamp")
         if sv is not None and st is not None:
             raise ValueError(
                 "minerva_delta: pass startingVersion OR "
@@ -614,9 +605,9 @@ class _StreamReader(DataSourceStreamReader):
                     "after the latest commit — nothing to stream "
                     "from there")
         self.starting = int(sv) if sv is not None else None
-        self.ignore_changes = str(_opt(
+        self.ignore_changes = str(option(
             options, "ignoreChanges", "false")).lower() == "true"
-        self.ignore_deletes = str(_opt(
+        self.ignore_deletes = str(option(
             options, "ignoreDeletes", "false")).lower() == "true"
         # ADMISSION CONTROL (upstream delta-spark's option name,
         # commit-boundary granularity: our offsets are whole
@@ -632,7 +623,7 @@ class _StreamReader(DataSourceStreamReader):
         # across restarts (saved at latestOffset time so the reload
         # is at or ahead of Spark's offset log — see
         # streaming/admission.py for the full argument).
-        mft = _opt(options, "maxFilesPerTrigger")
+        mft = option(options, "maxFilesPerTrigger")
         self.max_files = int(mft) if mft is not None else None
         if self.max_files is not None and self.max_files < 1:
             raise ValueError(
@@ -643,7 +634,7 @@ class _StreamReader(DataSourceStreamReader):
         # brand-new query (no state file), capping even the first
         # run's cold snapshot — admission.fresh_start_floor.
         from .admission import attach_state, fresh_start_floor
-        opt = lambda n: _opt(options, n)  # noqa: E731
+        opt = lambda n: option(options, n)  # noqa: E731
         self._wm_state = attach_state(
             opt, "minerva_delta", self.path,
             self.max_files is not None)
@@ -788,7 +779,7 @@ def _write_task(batches, table_path: str, schema: T.StructType,
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ..storage.delta import _file_stats
+    from ..storage.delta import file_stats_json
 
     batches = list(batches)
     if not batches:
@@ -816,10 +807,8 @@ def _write_task(batches, table_path: str, schema: T.StructType,
                "modificationTime": int(__import__("time").time()
                                        * 1000),
                "dataChange": True}
-        stats = _file_stats(abs_path, [f for f in schema.fields
-                                       if f.name not in part_cols])
-        if stats:
-            add["stats"] = stats
+        add["stats"] = file_stats_json(
+            abs_path, [f for f in schema.fields if f.name not in part_cols])
         return add
 
     adds = []
@@ -859,15 +848,15 @@ class _DeltaWriter(DataSourceArrowWriter):
 
     def __init__(self, options: dict, schema: T.StructType,
                  overwrite: bool):
-        self.path = _opt(options, "path")
+        self.path = option(options, "path")
         if not self.path:
             raise ValueError("minerva_delta requires a path")
         self.table_path = os.path.abspath(self.path)
         self.schema_ = schema
         self.mode = "overwrite" if overwrite else "append"
-        self.merge_schema = str(_opt(
+        self.merge_schema = str(option(
             options, "mergeSchema", "false")).lower() == "true"
-        pb = _opt(options, "partitionBy")
+        pb = option(options, "partitionBy")
         part_cols = ([c.strip() for c in pb.split(",") if c.strip()]
                      if pb else [])
         dt = DeltaTable(self.path)
@@ -922,7 +911,7 @@ class _DeltaStreamWriter(DataSourceStreamArrowWriter):
                 "minerva_delta streaming sink supports append mode "
                 "(complete-mode overwrite per batch is not "
                 "exactly-once under the txn ledger)")
-        self.app_id = _opt(options, "txnAppId") or \
+        self.app_id = option(options, "txnAppId") or \
             f"minerva_delta_sink:{self._batch.table_path}"
 
     def write(self, iterator):
@@ -948,11 +937,11 @@ class MinervaDeltaDataSource(DataSource):
         return "minerva_delta"
 
     def _cdf(self) -> bool:
-        return str(_opt(dict(self.options), "readChangeFeed",
-                        "false")).lower() == "true"
+        return str(option(dict(self.options), "readChangeFeed",
+                          "false")).lower() == "true"
 
     def schema(self):
-        path = _opt(dict(self.options), "path")
+        path = option(dict(self.options), "path")
         if not path:
             raise ValueError("minerva_delta requires a path")
         if self._cdf():

@@ -50,12 +50,7 @@ from pyspark.sql.datasource import (DataSource,
                                     WriterCommitMessage)
 
 from ..storage.iceberg import IcebergTable, _localize, _to_spark_schema
-
-
-def _opt(options: dict, name: str, default=None):
-    """Reader option keys reach Python data sources lowercased."""
-    lowered = {str(k).lower(): v for k, v in options.items()}
-    return lowered.get(name.lower(), default)
+from . import option, preds_from_filters
 
 
 class _IceFilePartition(InputPartition):
@@ -300,30 +295,6 @@ def _parquet_paths(files: list[dict]) -> list[str]:
     return out
 
 
-def _preds_from_filters(filters, names: set) -> list[tuple]:
-    """Spark Filter objects → the engine's ``(col, op, lit)``
-    predicate shape, keeping only single-column comparison filters
-    over known top-level columns.  Used for SCAN PLANNING only — the
-    caller always hands every filter back to Spark (`pushFilters`
-    returns "filters that still need to be evaluated"), so pruning
-    can never change results, only skip provably-excluded files."""
-    from pyspark.sql.datasource import (EqualTo, GreaterThan,
-                                        GreaterThanOrEqual, LessThan,
-                                        LessThanOrEqual)
-
-    ops = {EqualTo: "=", GreaterThan: ">", GreaterThanOrEqual: ">=",
-           LessThan: "<", LessThanOrEqual: "<="}
-    preds = []
-    for f in filters:
-        op = ops.get(type(f))
-        if op is None or len(f.attribute) != 1:
-            continue
-        col = f.attribute[0]
-        if col in names:
-            preds.append((col, op, f.value))
-    return preds
-
-
 def _walk_chain(md: dict, start_id: int, end_id: int,
                 ctx: str = "stream"):
     """(snaps, ordered, chain oldest-exclusive..end) along the parent
@@ -374,41 +345,27 @@ def _delete_may_touch(f: dict, d: dict, types_by_id: dict) -> bool:
       the delete's sequence number is untouchable; otherwise the
       delete's key-column bounds must overlap the data file's.
     """
-    from ..storage.iceberg import _bounds_map, _decode_bound
+    from ..storage.core import may_match
+    from ..storage.iceberg import decoded_bounds
 
-    d_lo = _bounds_map(d.get("lower_bounds"))
-    d_hi = _bounds_map(d.get("upper_bounds"))
     if d.get("content") == 1:
-        lo, hi = d_lo.get(_PATH_FIELD_ID), d_hi.get(_PATH_FIELD_ID)
-        if lo is None or hi is None:
-            return True  # no path bounds: may reference f
-        try:
-            return (lo.decode("utf-8") <= f["file_path"]
-                    <= hi.decode("utf-8"))
-        except UnicodeDecodeError:
-            return True
+        bounds = decoded_bounds(d, {_PATH_FIELD_ID: "string"})
+        return may_match(bounds, [(_PATH_FIELD_ID, "=", f["file_path"])])
     if d.get("content") == 2:
         fseq = int(f["_seq"]) if f.get("_seq") is not None else None
         dseq = int(d["_seq"]) if d.get("_seq") is not None else None
         if fseq is not None and dseq is not None and fseq >= dseq:
             return False  # equality deletes only reach OLDER files
-        f_lo = _bounds_map(f.get("lower_bounds"))
-        f_hi = _bounds_map(f.get("upper_bounds"))
-        for fid in (d.get("equality_ids") or ()):
-            t = types_by_id.get(fid)
-            dl = _decode_bound(t, d_lo.get(fid))
-            dh = _decode_bound(t, d_hi.get(fid))
-            fl = _decode_bound(t, f_lo.get(fid))
-            fh = _decode_bound(t, f_hi.get(fid))
-            try:
-                if (dh is not None and fl is not None
-                        and dh < fl) or \
-                   (dl is not None and fh is not None
-                        and dl > fh):
-                    return False
-            except TypeError:
-                continue  # incomparable: stay conservative
-        return True
+        types = {fid: types_by_id.get(fid)
+                 for fid in (d.get("equality_ids") or ())}
+        # the delete file's key envelope as predicates on f's bounds;
+        # a float upper bound may leave NaN keys out, so it never prunes
+        envelope = [(fid, op, v)
+                    for fid, (dl, dh) in decoded_bounds(d, types).items()
+                    for op, v in ((">=", dl), ("<=", dh))
+                    if v is not None
+                    and not (op == "<=" and isinstance(v, float))]
+        return may_match(decoded_bounds(f, types), envelope)
     return True  # unknown content: never drop silently
 
 
@@ -541,7 +498,7 @@ class _IceChangelogBatchReader(DataSourceReader):
     the same pre-image semantics as the streaming changelog."""
 
     def __init__(self, options: dict):
-        path = _opt(options, "path")
+        path = option(options, "path")
         if not path:
             raise ValueError("minerva_iceberg requires a path")
         self.tbl = IcebergTable(path)
@@ -549,9 +506,9 @@ class _IceChangelogBatchReader(DataSourceReader):
         self.ice_schema = self.tbl._current_schema(self.md)
         self.base_schema = _to_spark_schema(self.ice_schema)
         self.schema_ = _changelog_schema(self.base_schema)
-        frm = _opt(options, "fromSnapshotId")
+        frm = option(options, "fromSnapshotId")
         self.start_id = int(frm) if frm is not None else -1
-        to = _opt(options, "toSnapshotId")
+        to = option(options, "toSnapshotId")
         if to is not None:
             self.end_id = int(to)
         else:
@@ -574,16 +531,16 @@ class _IceChangelogBatchReader(DataSourceReader):
 
 class _IceBatchReader(DataSourceReader):
     def __init__(self, options: dict):
-        path = _opt(options, "path")
+        path = option(options, "path")
         if not path:
             raise ValueError("minerva_iceberg requires a path")
         self.tbl = IcebergTable(path)
         self.md = self.tbl.metadata()
         self.ice_schema = self.tbl._current_schema(self.md)
         self.schema_ = _to_spark_schema(self.ice_schema)
-        sid = _opt(options, "snapshotId")
-        ref = _opt(options, "ref")
-        aot = _opt(options, "as-of-timestamp")  # upstream Spark name
+        sid = option(options, "snapshotId")
+        ref = option(options, "ref")
+        aot = option(options, "as-of-timestamp")  # upstream Spark name
         if sum(x is not None for x in (sid, ref, aot)) > 1:
             raise ValueError(
                 "minerva_iceberg: pass only one of snapshotId / ref "
@@ -602,12 +559,12 @@ class _IceBatchReader(DataSourceReader):
         :meth:`IcebergTable.read`.  EVERY filter is handed back to
         Spark for post-scan evaluation — pushdown here is pruning,
         never filtering, so a missed bound can only cost time."""
-        self.preds = _preds_from_filters(
+        self.preds = preds_from_filters(
             filters, {f.name for f in self.schema_.fields})
         return filters
 
     def partitions(self):
-        from ..storage.iceberg import _file_may_match
+        from ..storage.iceberg import prune_files
 
         files, deletes = self.tbl._data_files(
             self.tbl._snapshot(self.md, self.sid), self.preds,
@@ -638,15 +595,7 @@ class _IceBatchReader(DataSourceReader):
                 eq.append((_localize(d["file_path"]),
                            int(d["_seq"]), cols))
             eq_deletes = tuple(eq)
-        if self.preds:
-            field_id = {f["name"]: f["id"]
-                        for f in self.ice_schema["fields"]}
-            field_type = {f["name"]: f["type"]
-                          for f in self.ice_schema["fields"]
-                          if isinstance(f["type"], str)}
-            files = [f for f in files
-                     if _file_may_match(f, self.preds, field_id,
-                                        field_type)]
+        files = prune_files(files, self.preds, self.ice_schema)
         # per-file delete-state attach pruning: a task only opens
         # the delete parquets whose manifest bounds say they can
         # touch ITS file — on a long-lived upsert table the delete
@@ -680,16 +629,16 @@ class _IceStreamReader(DataSourceStreamReader):
     """Offsets are snapshot ids: {"snapshot": id or -1}."""
 
     def __init__(self, options: dict):
-        self.path = _opt(options, "path")
+        self.path = option(options, "path")
         if not self.path:
             raise ValueError("minerva_iceberg requires a path")
         self.tbl = IcebergTable(self.path)
         md = self.tbl.metadata()
         self.ice_schema = self.tbl._current_schema(md)
         self.schema_ = _to_spark_schema(self.ice_schema)
-        frm = _opt(options, "fromSnapshotId")
+        frm = option(options, "fromSnapshotId")
         self.from_snapshot = int(frm) if frm is not None else None
-        self.changelog = str(_opt(
+        self.changelog = str(option(
             options, "changelog", "false")).lower() == "true"
         self.out_schema = (_changelog_schema(self.schema_)
                            if self.changelog else self.schema_)
@@ -697,10 +646,10 @@ class _IceStreamReader(DataSourceStreamReader):
         # true for the APPEND stream (documented divergence:
         # retraction-only snapshots emit nothing there anyway) and
         # false for the CHANGELOG stream (deletes are its point)
-        self.skip_deletes = str(_opt(
+        self.skip_deletes = str(option(
             options, "streaming-skip-delete-snapshots",
             "false" if self.changelog else "true")).lower() == "true"
-        self.skip_overwrites = str(_opt(
+        self.skip_overwrites = str(option(
             options, "streaming-skip-overwrite-snapshots",
             "false")).lower() == "true"
         # ADMISSION CONTROL (upstream Spark-Iceberg's option name,
@@ -717,7 +666,7 @@ class _IceStreamReader(DataSourceStreamReader):
         # across restarts (saved at latestOffset time so the reload
         # is at or ahead of Spark's offset log — see
         # streaming/admission.py for the full argument).
-        mfb = _opt(options, "streaming-max-files-per-micro-batch")
+        mfb = option(options, "streaming-max-files-per-micro-batch")
         self.max_files = int(mfb) if mfb is not None else None
         if self.max_files is not None and self.max_files < 1:
             raise ValueError(
@@ -728,7 +677,7 @@ class _IceStreamReader(DataSourceStreamReader):
         # on a brand-new query (no state file), capping even the
         # first run's cold history — admission.fresh_start_floor.
         from .admission import attach_state, fresh_start_floor
-        opt = lambda n: _opt(options, n)  # noqa: E731
+        opt = lambda n: option(options, n)  # noqa: E731
         self._wm_state = attach_state(
             opt, "minerva_iceberg",
             self.path, self.max_files is not None)
@@ -874,11 +823,11 @@ class _IceWriter(DataSourceArrowWriter):
                 "minerva_iceberg writer is append-only "
                 "(mode('append')); overwrite would need a REPLACE "
                 "snapshot")
-        self.path = _opt(options, "path")
+        self.path = option(options, "path")
         if not self.path:
             raise ValueError("minerva_iceberg requires a path")
         self.schema_ = schema
-        pb = _opt(options, "partitionBy")
+        pb = option(options, "partitionBy")
         self.partition_by = pb.strip() if pb else None
         # one partition FIELD only (a comma inside transform parens —
         # bucket(col, 4) / truncate(col, 10) — is fine)
@@ -901,7 +850,7 @@ class _IceWriter(DataSourceArrowWriter):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from ..storage.iceberg_write import _file_bounds
+        from ..storage.iceberg_write import bound_entries
 
         batches = list(iterator)
         if not batches:
@@ -923,9 +872,7 @@ class _IceWriter(DataSourceArrowWriter):
             }
             if pval is not None:
                 entry["partition"] = {self.part.name: pval}
-            lo, hi = _file_bounds(final, self.ice_schema)
-            entry["lower_bounds"] = lo or None
-            entry["upper_bounds"] = hi or None
+            bound_entries([entry], self.ice_schema)
             return entry
 
         entries = []
@@ -987,7 +934,7 @@ class _IceStreamWriter(DataSourceStreamArrowWriter):
     def __init__(self, options: dict, schema: T.StructType,
                  overwrite: bool):
         self._batch = _IceWriter(options, schema, overwrite)
-        self.app_id = _opt(options, "txnAppId") or \
+        self.app_id = option(options, "txnAppId") or \
             f"minerva_iceberg_sink:{os.path.abspath(self._batch.path)}"
 
     def write(self, iterator):
@@ -1042,18 +989,18 @@ class MinervaIcebergDataSource(DataSource):
         return "minerva_iceberg"
 
     def schema(self):
-        path = _opt(dict(self.options), "path")
+        path = option(dict(self.options), "path")
         if not path:
             raise ValueError("minerva_iceberg requires a path")
         base = IcebergTable(path).schema()
-        if str(_opt(dict(self.options), "changelog",
-                    "false")).lower() == "true":
+        if str(option(dict(self.options), "changelog",
+                      "false")).lower() == "true":
             return _changelog_schema(base)
         return base
 
     def reader(self, schema) -> DataSourceReader:
         opts = dict(self.options)
-        if str(_opt(opts, "changelog", "false")).lower() == "true":
+        if str(option(opts, "changelog", "false")).lower() == "true":
             return _IceChangelogBatchReader(opts)
         return _IceBatchReader(opts)
 

@@ -11,7 +11,7 @@ claims:
    split) and as N tasks (64 MiB splits) with identical count and
    sum(bid); wall-clock speedup is reported.
 2. FLAT MEMORY — a subprocess decodes one 64 MiB byte range via
-   ``_split_blocks`` and reports ru_maxrss: bounded by one block +
+   ``storage.core.read_blocks`` and reports ru_maxrss: bounded by one block +
    interpreter overhead, nowhere near the 1 GiB file.
 3. NO DRIVER BYTES — the read plans from (path, start, end) triples
    only; this script never ships file bytes through the driver.
@@ -42,14 +42,14 @@ SCHEMA = {"type": "record", "name": "probe", "fields": [
 
 
 def _build_file() -> None:
-    from python_minerva_etl_spark.storage.iceberg_write import _zigzag
+    from python_minerva_etl_spark.storage.core import zigzag
 
     os.makedirs(os.path.dirname(PATH), exist_ok=True)
     body = bytearray()
     for i in range(BLOCK_RECS):
-        body += _zigzag(BID_BASE) + _zigzag(i) + _zigzag(i * 7 % 97)
+        body += zigzag(BID_BASE) + zigzag(i) + zigzag(i * 7 % 97)
     body = bytes(body)
-    patch = {k: _zigzag(BID_BASE + k) for k in range(N_BLOCKS)}
+    patch = {k: zigzag(BID_BASE + k) for k in range(N_BLOCKS)}
     assert all(len(p) == len(patch[0]) for p in patch.values())
     w = len(patch[0])
 
@@ -60,13 +60,13 @@ def _build_file() -> None:
     sync = bytes(range(16))
     out = io.BytesIO()
     out.write(b"Obj\x01")
-    out.write(_zigzag(len(meta)))
+    out.write(zigzag(len(meta)))
     for k, v in meta.items():
         kb = k.encode()
-        out.write(_zigzag(len(kb)) + kb + _zigzag(len(v)) + v)
+        out.write(zigzag(len(kb)) + kb + zigzag(len(v)) + v)
     out.write(b"\x00")
     out.write(sync)
-    frame = _zigzag(BLOCK_RECS) + _zigzag(len(body))
+    frame = zigzag(BLOCK_RECS) + zigzag(len(body))
     for k in range(N_BLOCKS):
         out.write(frame)
         out.write(patch[k] + body[w:])
@@ -91,22 +91,21 @@ def _measure(spark, split_bytes: int) -> tuple[float, int, int, int]:
 _CHILD = r"""
 import resource, sys, time
 sys.path.insert(0, %(repo)r)
-from python_minerva_etl_spark.sources.avro import (_read_header,
-                                                   _split_blocks)
-from python_minerva_etl_spark.storage.iceberg import _Cursor, _decode
+from python_minerva_etl_spark.storage.core import (Cursor, avro_decode,
+                                                  read_blocks, read_header)
 import json as _json
 start, end = int(sys.argv[1]), int(sys.argv[2])
 with open(%(path)r, "rb") as fh:
-    meta, sync, hend = _read_header(fh)
+    meta, sync, hend = read_header(fh)
     schema = _json.loads(meta["avro.schema"].decode())
     size = fh.seek(0, 2)
     rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
     n_rows = blocks = 0
-    for n, body in _split_blocks(fh, sync, "null", start, end,
-                                 hend, size):
-        cur = _Cursor(body); names = {}
+    for n, body in read_blocks(fh, sync, "null", start, end,
+                               hend, size):
+        cur = Cursor(body); names = {}
         for _ in range(n):
-            _decode(cur, schema, names)
+            avro_decode(cur, schema, names)
         n_rows += n; blocks += 1
     rss1 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
 print(_json.dumps({"blocks": blocks, "rows": n_rows,

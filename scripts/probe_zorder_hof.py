@@ -1,12 +1,12 @@
 #!/usr/bin/env python
 """Before/after probe for the r9 verdict #2 ("What's wrong" #1) fix:
-`_zorder_cluster` used to INLINE the bucket proxy expression inside
+`zorder_cluster` used to INLINE the bucket proxy expression inside
 the boundary-filter HOF lambda —
 ``size(filter(<255 bounds>, b -> b <= (<proxy expr>)))`` — so for a
 STRING zorder key the proxy
 (``conv(hex(rpad(substring(CAST(col AS BINARY),1,4),4,X'00')),16,10)``)
 re-evaluated once per boundary element, ~255x per row.  The fix binds
-the proxy as a column before the filter (storage/delta.py).
+the proxy as a column before the filter (storage/core.py).
 
 This probe times BOTH expression shapes on the same synthetic string
 column (bucket assignment only — the stage the fix touches), plus an
@@ -46,8 +46,7 @@ def main() -> None:
     from pyspark.sql import types as T
 
     from python_minerva_etl_spark.session import get_spark
-    from python_minerva_etl_spark.storage.delta import (
-        _zorder_proxy_sql)
+    from python_minerva_etl_spark.storage.core import zorder_proxy_sql
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     spark = get_spark(app_name="probe-zorder-hof")
@@ -59,7 +58,7 @@ def main() -> None:
         (F.col("id") % 997).alias("v")).cache()
     df.count()
 
-    px = _zorder_proxy_sql("k", T.StringType())
+    px = zorder_proxy_sql("k", T.StringType())
     bounds = "array(" + ", ".join(
         f"CAST({float(v)!r} AS DOUBLE)"
         for v in range(1, 256)) + ")"

@@ -9,11 +9,12 @@ import json
 import os
 import random
 
-from python_minerva_etl_spark.sources.avro import (_find_sync,
-                                                   _read_header,
-                                                   plan_splits,
+from python_minerva_etl_spark.sources.avro import (plan_splits,
                                                    read_avro,
                                                    write_avro)
+from python_minerva_etl_spark.storage.core import find_sync as _find_sync
+from python_minerva_etl_spark.storage.core import \
+    read_header as _read_header
 from tests.test_avro_vector import _ALL_VARINT, _multi_block
 from tests.test_iceberg import _avro_file
 
@@ -71,8 +72,8 @@ def test_zstd_frame_content_size():
     size omitted and for non-zstd bytes."""
     import pyarrow as pa
 
-    from python_minerva_etl_spark.sources.avro import \
-        _zstd_frame_size
+    from python_minerva_etl_spark.storage.core import \
+        zstd_frame_size as _zstd_frame_size
 
     for size in (0, 1, 255, 256, 300, 65_791, 65_792, 1 << 20):
         blob = bytes(i & 0xFF for i in range(size))

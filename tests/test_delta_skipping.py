@@ -169,3 +169,17 @@ def test_optimize_sort_by_unknown_column_refuses(spark, tmp_path):
     write_delta(spark, spark.range(0, 5).toDF("id"), p)
     with pytest.raises(ValueError, match="sort_by"):
         DeltaTable(p).optimize(spark, sort_by=["nope"])
+
+
+def test_nan_max_does_not_prune_greater_than(spark, tmp_path):
+    """Spark orders NaN above every value, so a file holding NaN
+    matches ``x > 100`` whatever its footer max says (Spark writes a
+    NaN max here).  The pruned read must return what Spark's own
+    filter returns."""
+    p = str(tmp_path / "t")
+    df = spark.createDataFrame([(1.0,), (float("nan"),), (50.0,)],
+                               "x double")
+    write_delta(spark, df.coalesce(1), p)
+    got = read_delta(spark, p, where=[("x", ">", 100.0)])
+    want = df.filter("x > 100")
+    assert got.count() == want.count() == 1

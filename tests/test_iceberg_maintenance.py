@@ -567,3 +567,26 @@ def test_compact_zorder_transformed_partition_spec(spark, tmp_path):
     mid = base + datetime.timedelta(days=2)
     n = t.read(spark, where=[("ts", ">=", mid)]).count()
     assert n == sum(1 for i in range(2048) if i % 3 == 2)
+
+
+def test_nan_left_out_of_bounds_does_not_prune(tmp_path):
+    """pyarrow leaves NaN out of float footer bounds, so the upper
+    bound 50.0 of [1.0, NaN, 50.0] does not prove ``x > 100`` false:
+    Spark orders NaN above every value."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from python_minerva_etl_spark.storage.iceberg import _file_may_match
+    from python_minerva_etl_spark.storage.iceberg_write import _file_bounds
+
+    path = str(tmp_path / "f.parquet")
+    pq.write_table(pa.table({"x": [1.0, float("nan"), 50.0]}), path)
+    ice_schema = {"fields": [{"id": 1, "name": "x", "required": False,
+                              "type": "double"}]}
+    lo, hi = _file_bounds(path, ice_schema)
+    entry = {"lower_bounds": lo, "upper_bounds": hi}
+    assert _file_may_match(entry, [("x", ">", 100.0)], {"x": 1},
+                           {"x": "double"})
+    # lower-side pruning stays
+    assert not _file_may_match(entry, [("x", "<", 0.5)], {"x": 1},
+                               {"x": "double"})

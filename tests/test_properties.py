@@ -4,7 +4,8 @@ materialization scheduler rely on."""
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+import math
+from datetime import datetime, timedelta, timezone
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -180,3 +181,144 @@ def test_bloom_no_false_negatives(values, probe):
     # crash; the empty filter rejects everything
     if not values:
         assert not _bloom_may_contain("0", probe)
+
+
+# ------------------------------------------------ pruning soundness
+#
+# One property over all three table formats' bound encodings: write a
+# small parquet file with pyarrow, derive each format's bounds from its
+# footer (Delta stats JSON, Iceberg single-value binary bounds,
+# SnapTable canonical stats + bloom), decode them the way the reader
+# does, and whenever the pruning evaluator says "no", check that no row
+# satisfies the predicates under Spark's semantics: NULL satisfies
+# nothing, NaN is above every value and equal to itself, -0.0 == 0.0.
+
+_EPOCH = datetime(1970, 1, 1)
+_OPS = ("=", "<", "<=", ">", ">=")
+_DOMAINS = {
+    "i": st.one_of(st.integers(-5, 5),
+                   st.integers(-2 ** 63, 2 ** 63 - 1)),
+    "d": st.one_of(st.just(float("nan")),
+                   st.sampled_from([0.0, -0.0, float("inf"),
+                                    float("-inf")]),
+                   st.integers(-5, 5).map(float),
+                   st.floats(allow_nan=False)),
+    "s": st.text(st.characters(blacklist_categories=("Cs",)),
+                 max_size=4),
+    "t": st.one_of(st.integers(-5, 5),
+                   st.integers(-10 ** 16, 10 ** 16)).map(
+        lambda us: _EPOCH + timedelta(microseconds=us)),
+}
+_DOMAINS["n"] = _DOMAINS["i"]  # the all-null column
+_ARROW = {"i": "int64", "d": "float64", "s": "string",
+          "t": "timestamp[us]", "n": "int64"}
+_ICE = {"i": "long", "d": "double", "s": "string", "t": "timestamp",
+        "n": "long"}
+
+
+@st.composite
+def _pruning_case(draw):
+    n = draw(st.integers(1, 9))
+    # a quarter of the values are NULL; "n" is all NULL
+    nullable = {c: st.tuples(st.integers(0, 3), dom).map(
+        lambda t: t[1] if t[0] else None) for c, dom in _DOMAINS.items()}
+    cols = {c: [None] * n if c == "n" else draw(st.lists(
+        nullable[c], min_size=n, max_size=n)) for c in _DOMAINS}
+    groups = draw(st.integers(1, 3))
+    # 1-3 literals per column, often the file's own values (the
+    # boundary cases); every single-column predicate and envelope
+    # over them is checked, plus one cross-column conjunction
+    lits = {}
+    for c, dom in _DOMAINS.items():
+        vals = [v for v in cols[c] if v is not None]
+        lit = st.one_of(dom, st.sampled_from(vals)) if vals else dom
+        lits[c] = draw(st.lists(lit, min_size=1, max_size=3))
+    conj = draw(st.lists(st.sampled_from(
+        [(c, op, v) for c, vs in lits.items() for v in vs
+         for op in _OPS]), min_size=2, max_size=3))
+    return cols, -(-n // groups), lits, conj
+
+
+def _spark_key(v):
+    if isinstance(v, float):
+        return (1, 0.0) if math.isnan(v) else (0, v)
+    return (0, v)
+
+
+def _holds(v, op, lit) -> bool:
+    if v is None:
+        return False
+    a, b = _spark_key(v), _spark_key(lit)
+    return {"=": a == b, "<": a < b, "<=": a <= b, ">": a > b,
+            ">=": a >= b}[op]
+
+
+def _reject_constant(token):
+    raise ValueError(f"not RFC 8259 JSON: {token}")
+
+
+@settings(max_examples=150, deadline=None)
+@given(_pruning_case())
+def test_pruning_sound_for_every_format(case):
+    import json
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from python_minerva_etl_spark.storage.delta import (_add_may_match,
+                                                        file_stats_json)
+    from python_minerva_etl_spark.storage.iceberg import _file_may_match
+    from python_minerva_etl_spark.storage.iceberg_write import _file_bounds
+    from python_minerva_etl_spark.storage.snaptable import (_canon,
+                                                            _file_bloom,
+                                                            _file_stats)
+    from python_minerva_etl_spark.storage.snaptable import \
+        _file_may_match as snap_may_match
+
+    cols, rg_size, lits, conj = case
+    names = list(cols)
+    rows = list(zip(*cols.values()))
+    spark_types = {"i": T.LongType(), "d": T.DoubleType(),
+                   "s": T.StringType(), "t": T.TimestampNTZType(),
+                   "n": T.LongType()}
+    with tempfile.TemporaryDirectory() as d:
+        path = f"{d}/f.parquet"
+        pq.write_table(pa.table({c: pa.array(v, type=_ARROW[c])
+                                 for c, v in cols.items()}),
+                       path, row_group_size=rg_size)
+        stats = file_stats_json(
+            path, [T.StructField(c, t) for c, t in spark_types.items()])
+        json.loads(stats, parse_constant=_reject_constant)
+        ice_schema = {"fields": [
+            {"id": i + 1, "name": c, "required": False, "type": _ICE[c]}
+            for i, c in enumerate(names)]}
+        lo, hi = _file_bounds(path, ice_schema)
+        _, snap_stats = _file_stats(path, names)
+        snap_entry = json.loads(json.dumps(
+            {"stats": snap_stats, "bloom": _file_bloom(path, names)}))
+
+    def any_row(conds):
+        return any(all(_holds(r[names.index(c)], op, v)
+                       for c, op, v in conds) for r in rows)
+
+    singles = [[(c, op, v)] for c, vs in lits.items() for v in vs
+               for op in _OPS]
+    for conds in singles + [conj]:
+        if not _add_may_match({"stats": stats}, conds, [], spark_types):
+            assert not any_row(conds), ("delta", conds, stats)
+        if not _file_may_match({"lower_bounds": lo, "upper_bounds": hi},
+                               conds,
+                               {c: i + 1 for i, c in enumerate(names)},
+                               _ICE):
+            assert not any_row(conds), ("iceberg", conds, lo, hi)
+    # SnapTable prunes on envelopes: lo <= col <= hi per column
+    envelopes = [{c: (a, b)} for c, vs in lits.items()
+                 for a in vs for b in vs]
+    for env in envelopes + [{c: (v, v) for c, _, v in conj}]:
+        if not snap_may_match(snap_entry, {
+                c: [_canon(a), _canon(b)] for c, (a, b) in env.items()}):
+            assert not any_row([(c, op, v) for c, (a, b) in env.items()
+                                for op, v in ((">=", a), ("<=", b))]), \
+                ("snaptable", env, snap_stats)

@@ -81,6 +81,21 @@ def test_write_caps_records_per_file_from_stats(spark, tmp_path):
         spark.conf.unset("spark.minerva.snaptable.targetFileBytes")
 
 
+def test_malformed_target_file_bytes_raises(spark, tmp_path):
+    """A targetFileBytes value that is not an integer is refused with
+    an error naming the conf, never silently replaced by 128 MB."""
+    tbl = SnapTable(str(tmp_path / "t"))
+    tbl.append(spark, _mk(spark, [(1, "a", 1, 1.0)]), KEY)
+    spark.conf.set("spark.minerva.snaptable.targetFileBytes", "128MB")
+    try:
+        with pytest.raises(ValueError,
+                           match="snaptable.targetFileBytes"):
+            tbl.append(spark, _mk(spark, [(2, "a", 2, 2.0)]), KEY)
+    finally:
+        spark.conf.unset("spark.minerva.snaptable.targetFileBytes")
+    assert tbl.latest_version() == 1
+
+
 def test_merge_batch_outranks_stored(spark, tmp_path):
     """Replaying a batch with LOWER seqs still replaces stored rows —
     the reference's ON CONFLICT DO UPDATE, not a seq comparison."""
