@@ -79,11 +79,16 @@ def gopher_quintuple(text: str | None) -> tuple:
 
 
 def _bytes_conf(spark, key: str, default: int) -> int:
-    """A byte-size Spark conf value ("128m", "1g", or plain bytes)."""
+    """A byte-size Spark conf value ("128m", "1g", "134217728b" or
+    plain bytes).  Only a missing key becomes ``default``; a value
+    that is not a byte size raises a ``ValueError`` naming the conf."""
+    from pyspark.errors import SparkNoSuchElementException
+
     try:
-        v = str(spark.conf.get(key)).strip().lower()
-    except Exception:
+        raw = spark.conf.get(key)
+    except SparkNoSuchElementException:
         return default
+    v = str(raw).strip().lower()
     mult = 1
     for suf, m in (("k", 1 << 10), ("m", 1 << 20),
                    ("g", 1 << 30), ("t", 1 << 40)):
@@ -97,8 +102,10 @@ def _bytes_conf(spark, key: str, default: int) -> int:
         v = v[:-1]
     try:
         return int(float(v) * mult)
-    except ValueError:
-        return default
+    except (ValueError, OverflowError):
+        raise ValueError(
+            f"{key} must be a byte size such as 134217728, 128m or 1g, "
+            f"got {raw!r}") from None
 
 
 def _input_files_and_bytes(df: DataFrame):

@@ -12,12 +12,17 @@ the Avro source share.
   per-column ``[lo, hi]`` bounds, with Spark's comparison semantics.
 - **put-if-absent publish**: the atomic commit step of Delta,
   Iceberg and SnapTable.
+- **Optimistic commit loop**: :func:`commit_with_retries`, the one
+  retry policy (at most :data:`COMMIT_ATTEMPTS` attempts) every
+  format's commit runs under.
 - **Z-order clustering** for Delta OPTIMIZE and Iceberg compaction.
 
 Formats keep only their own encodings and policies on top (Delta's
 stats JSON and partition values, Iceberg's single-value binary bounds
 and transforms, SnapTable's canonical stats and blooms), and each
-raises its own concurrent-commit exception.
+raises its own concurrent-commit exception.  Each format has one
+private commit function that runs under :func:`commit_with_retries`
+and is the only place its lost-race signal becomes a retry.
 """
 
 from __future__ import annotations
@@ -540,6 +545,29 @@ def publish_if_absent(final: str, text: str) -> bool:
         return False
     finally:
         os.remove(tmp)
+
+
+COMMIT_ATTEMPTS = 10
+
+
+class LostRace(NamedTuple):
+    """What a commit attempt returns when a concurrent writer took
+    its version first; ``error`` is the format's own exception."""
+    error: Exception
+
+
+def commit_with_retries(attempt):
+    """Run ``attempt()`` until it returns anything but a
+    :class:`LostRace`, at most :data:`COMMIT_ATTEMPTS` times, and
+    return that result.  Each attempt re-reads the table and derives
+    its commit against the new snapshot.  When every attempt lost,
+    the last race's error raises.  A conflict an attempt raises (a
+    stale scan) propagates at once and is never retried."""
+    for _ in range(COMMIT_ATTEMPTS):
+        out = attempt()
+        if not isinstance(out, LostRace):
+            return out
+    raise out.error
 
 
 # ------------------------------------------------------ z-order clustering

@@ -70,12 +70,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .core import (NO_VALUES, footer_stats, may_match, publish_if_absent,
-                   zorder_cluster, zorder_proxy_sql)
+from .core import (NO_VALUES, LostRace, commit_with_retries, footer_stats,
+                   may_match, publish_if_absent, zorder_cluster,
+                   zorder_proxy_sql)
 
 _LOG = "_delta_log"
 _CHECKPOINT_EVERY = 10
-_COMMIT_RETRIES = 10
 
 # Table features (protocol reader v3 / writer v7) this engine
 # implements.  Reading a table whose readerFeatures exceed this set
@@ -455,10 +455,29 @@ def _commit_path(path: str, version: int) -> str:
     return os.path.join(_log_dir(path), f"{version:020d}.json")
 
 
+def _commit_info(operation: str, params: dict | None = None) -> dict:
+    """The ``commitInfo`` action every commit of this engine leads
+    with."""
+    return {"commitInfo": {
+        "timestamp": int(time.time() * 1000), "operation": operation,
+        "operationParameters": params or {},
+        "engineInfo": "python-minerva-etl-spark"}}
+
+
+def _remove(f: dict, now: int, data_change: bool = True) -> dict:
+    """The ``remove`` action for active file ``f``.  A remove cancels
+    an add only when their (path, DV id) match, so it carries the
+    file's deletion vector too."""
+    rm = {"path": f["path"], "deletionTimestamp": now,
+          "dataChange": data_change}
+    if f.get("deletionVector"):
+        rm["deletionVector"] = f["deletionVector"]
+    return {"remove": rm}
+
+
 class DeltaConcurrentCommit(FileExistsError):
-    """A concurrent writer committed the version this writer staged.
-    ``DeltaTable.write`` retries internally; this surfaces only when
-    retries are exhausted or ``_commit`` is driven directly."""
+    """A concurrent writer committed the version this writer staged,
+    or changed a file a DML or OPTIMIZE scanned (rerun it)."""
 
 
 class DeltaTable:
@@ -1434,7 +1453,8 @@ class DeltaTable:
         (:func:`.core.publish_if_absent`).  An existing commit file
         means a concurrent writer won — raise
         :class:`DeltaConcurrentCommit` (the Delta optimistic-
-        concurrency contract; ``write`` retries on it)."""
+        concurrency contract; :meth:`_optimistic_commit` retries on
+        it)."""
         final = _commit_path(self.path, version)
         text = "\n".join(json.dumps(a) for a in actions) + "\n"
         if not publish_if_absent(final, text):
@@ -1442,6 +1462,28 @@ class DeltaTable:
                 f"concurrent Delta commit at version {version}")
         if version % _CHECKPOINT_EVERY == 0 and version > 0:
             self._write_checkpoint(version)
+
+    def _optimistic_commit(self, operation: str, derive,
+                           params: dict | None = None):
+        """Every Delta commit, under :func:`.core.commit_with_retries`:
+        each attempt re-reads the snapshot (None before the first
+        commit), and ``derive(snap)`` runs the checks and returns the
+        actions after ``commitInfo`` (or, with nothing to commit, the
+        result).  Only :meth:`_commit`'s lost race is retried."""
+        def attempt():
+            snap = self._replay() if self.versions() else None
+            actions = derive(snap)
+            if not isinstance(actions, list):
+                return actions
+            version = 0 if snap is None else snap["version"] + 1
+            try:
+                self._commit(version,
+                             [_commit_info(operation, params)] + actions)
+            except DeltaConcurrentCommit as e:
+                return LostRace(e)
+            return version
+
+        return commit_with_retries(attempt)
 
     @staticmethod
     def _append_compatible(table: T.StructType, df: T.StructType) -> bool:
@@ -1523,17 +1565,13 @@ class DeltaTable:
         def key(f):
             return (f["path"], dv_unique_id(f.get("deletionVector")))
 
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
-            cur = self._replay()
+        tgt_by = {key(f): f for f in target["files"]}
+
+        def derive(cur):
             self._check_writable(cur, "restore")
             now = int(time.time() * 1000)
             cur_by = {key(f): f for f in cur["files"]}
-            tgt_by = {key(f): f for f in target["files"]}
-            actions: list[dict] = [{"commitInfo": {
-                "timestamp": now, "operation": "RESTORE",
-                "operationParameters": {"version": int(version)},
-                "engineInfo": "python-minerva-etl-spark"}}]
+            actions: list[dict] = []
             mt, mc = target["metaData"], cur["metaData"]
             if (mt["schemaString"] != mc["schemaString"]
                     or (mt.get("partitionColumns") or [])
@@ -1547,15 +1585,9 @@ class DeltaTable:
                 meta["configuration"] = (
                     mt.get("configuration") or {})
                 actions.append({"metaData": meta})
-            for k in sorted(cur_by, key=str):
-                if k in tgt_by:
-                    continue
-                f = cur_by[k]
-                rm = {"path": f["path"], "deletionTimestamp": now,
-                      "dataChange": True}
-                if f.get("deletionVector"):
-                    rm["deletionVector"] = f["deletionVector"]
-                actions.append({"remove": rm})
+            actions += [_remove(cur_by[k], now)
+                        for k in sorted(cur_by, key=str)
+                        if k not in tgt_by]
             for k in sorted(tgt_by, key=str):
                 if k in cur_by:
                     continue
@@ -1563,15 +1595,11 @@ class DeltaTable:
                 add["dataChange"] = True
                 add["modificationTime"] = now
                 actions.append({"add": add})
-            if len(actions) == 1:
-                return cur["version"]  # already at the target state
-            new_version = self._next_version()
-            try:
-                self._commit(new_version, actions)
-                return new_version
-            except DeltaConcurrentCommit as e:
-                last_err = e
-        raise last_err  # type: ignore[misc]
+            # empty: already at the target state
+            return actions or cur["version"]
+
+        return self._optimistic_commit("RESTORE", derive,
+                                       {"version": int(version)})
 
     def txn_version(self, app_id: str) -> int:
         """Latest ``txn`` (setTransaction) version recorded for
@@ -1607,102 +1635,104 @@ class DeltaTable:
         optimistic-concurrency race are retried (data files are
         staged once; only the log actions are rebuilt against the
         new snapshot).  Returns the committed version."""
-        if mode not in ("append", "overwrite"):
-            raise ValueError(f"unsupported mode {mode!r}")
-        if txn is not None and self.txn_version(txn[0]) >= txn[1]:
-            return self.versions()[-1]
-        partition_by = list(partition_by)
+        snap, partition_by = self.precheck_write(mode, partition_by,
+                                                 merge_schema)
+        if txn is not None and snap is not None \
+                and snap["txns"].get(txn[0], -1) >= txn[1]:
+            return snap["version"]
         missing_pcols = [c for c in partition_by if c not in df.columns]
         if missing_pcols:
             raise ValueError(
                 f"partition_by columns {missing_pcols} not in batch")
         os.makedirs(self.path, exist_ok=True)
         cm = None
-        if self.versions():
-            # refuse before staging any data: a commit that ignores an
-            # unknown writer feature's invariants corrupts the table
-            pre = self._replay()
-            self._check_writable(pre, mode)
-            cm = self._cm_mapping(pre)
-            if cm is not None and mode == "overwrite":
-                raise NotImplementedError(
-                    "Delta overwrite on a column-mapped table: "
-                    "restating the schema would need fresh field "
-                    "ids/physical names — append or DML instead")
-            if cm is not None and merge_schema:
-                raise NotImplementedError(
-                    "Delta merge_schema on a column-mapped table: "
-                    "new columns would need fresh field ids/physical "
-                    "names")
+        if snap is not None:
+            cm = self._cm_mapping(snap)
             # NOT NULL applies to appends (overwrite may change the
             # schema); invariants/CHECK come from the surviving
             # configuration either way
             self._enforce_constraints(
-                pre, df, mode, include_not_null=(mode == "append"))
-            if mode == "append":
-                table_pcols = pre["metaData"].get(
-                    "partitionColumns") or []
-                if partition_by and partition_by != table_pcols:
-                    raise ValueError(
-                        f"append partition_by {partition_by} != "
-                        f"table's partitionColumns {table_pcols}")
-                partition_by = table_pcols  # appends inherit it
+                snap, df, mode, include_not_null=(mode == "append"))
         adds = self._stage_data_files(df, partition_by, cm=cm)
-        return self._commit_write(adds, mode, partition_by,
+        return self.commit_staged(adds, mode, partition_by,
                                   df.schema, txn, merge_schema)
 
-    def _commit_write(self, adds: list[dict], mode: str,
+    def precheck_write(self, mode: str, partition_by,
+                       merge_schema: bool = False
+                       ) -> tuple[dict | None, list[str]]:
+        """The fail-fast half of :meth:`write`, shared with the
+        ``minerva_delta`` writer, which runs it before its executors
+        stage anything: refuse a table this engine cannot write
+        safely (a commit that ignores an unknown writer feature's
+        invariants corrupts the table) and resolve the partition
+        columns (appends inherit the table's).  Returns the current
+        snapshot (None before the first commit) and the partition
+        columns."""
+        if mode not in ("append", "overwrite"):
+            raise ValueError(f"unsupported mode {mode!r}")
+        partition_by = list(partition_by)
+        if not self.versions():
+            return None, partition_by
+        snap = self._replay()
+        self._check_writable(snap, mode)
+        if self._cm_mapping(snap) is not None:
+            if mode == "overwrite":
+                raise NotImplementedError(
+                    "Delta overwrite on a column-mapped table: "
+                    "restating the schema would need fresh field "
+                    "ids/physical names — append or DML instead")
+            if merge_schema:
+                raise NotImplementedError(
+                    "Delta merge_schema on a column-mapped table: "
+                    "new columns would need fresh field ids/physical "
+                    "names")
+        if mode == "append":
+            table_pcols = snap["metaData"].get("partitionColumns") or []
+            if partition_by and partition_by != table_pcols:
+                raise ValueError(
+                    f"append partition_by {partition_by} != "
+                    f"table's partitionColumns {table_pcols}")
+            partition_by = table_pcols
+        return snap, partition_by
+
+    def commit_staged(self, adds: list[dict], mode: str,
                       partition_by: list[str],
                       df_schema: T.StructType,
                       txn: tuple[str, int] | None = None,
                       merge_schema: bool = False) -> int:
-        """Retry-loop commit of already-staged add actions — the tail
-        of :meth:`write`, shared with the registered data source's
-        writer (whose executors stage the files themselves)."""
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
-            version = self._next_version()
-            if txn is not None and version > 0 \
-                    and self.txn_version(txn[0]) >= txn[1]:
-                return version - 1  # a concurrent retry won the race
-            actions: list[dict] = [{"commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "WRITE",
-                "operationParameters": {"mode": mode.upper()},
-                "engineInfo": "python-minerva-etl-spark",
-            }}]
-            if version == 0:
-                actions.append({"protocol": {
-                    "minReaderVersion": 1, "minWriterVersion": 2}})
-                actions.append({"metaData": {
-                    "id": str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": df_schema.json(),
-                    "partitionColumns": partition_by,
-                    "configuration": {},
-                    "createdTime": int(time.time() * 1000),
-                }})
+        """Commit already-staged add actions — the tail of
+        :meth:`write`, shared with the ``minerva_delta`` writer (whose
+        executors stage the files themselves).  Every attempt
+        re-checks the txn ledger and re-derives the schema and the
+        overwrite's removes against the current snapshot."""
+        def derive(prev):
+            if prev is None:
+                actions: list[dict] = [
+                    {"protocol": {"minReaderVersion": 1,
+                                  "minWriterVersion": 2}},
+                    {"metaData": {
+                        "id": str(uuid.uuid4()),
+                        "format": {"provider": "parquet", "options": {}},
+                        "schemaString": df_schema.json(),
+                        "partitionColumns": partition_by,
+                        "configuration": {},
+                        "createdTime": int(time.time() * 1000),
+                    }}]
+            elif txn is not None \
+                    and prev["txns"].get(txn[0], -1) >= txn[1]:
+                return prev["version"]  # a concurrent retry won the race
             elif mode == "overwrite":
                 # schema may change on overwrite: re-state metaData
-                prev = self._replay()
                 self._check_writable(prev, "overwrite")
                 meta = dict(prev["metaData"])
                 meta["schemaString"] = df_schema.json()
                 meta["partitionColumns"] = partition_by
-                actions.append({"metaData": meta})
                 now = int(time.time() * 1000)
-                for f in prev["files"]:
-                    # a remove cancels an add only when their (path,
-                    # DV id) match — drop the DV reference too or the
-                    # file would stay active
-                    rm = {"path": f["path"], "deletionTimestamp": now,
-                          "dataChange": True}
-                    if f.get("deletionVector"):
-                        rm["deletionVector"] = f["deletionVector"]
-                    actions.append({"remove": rm})
+                actions = [{"metaData": meta}] + [
+                    _remove(f, now) for f in prev["files"]]
             else:  # append to an existing table: schemas must line up
-                prev = self._replay()
                 self._check_writable(prev, "append")
+                actions = []
                 table_schema = T.StructType.fromJson(
                     json.loads(prev["metaData"]["schemaString"]))
                 if self._append_compatible(table_schema, df_schema):
@@ -1727,13 +1757,10 @@ class DeltaTable:
                 actions.append({"txn": {
                     "appId": txn[0], "version": int(txn[1]),
                     "lastUpdated": int(time.time() * 1000)}})
-            actions.extend(adds)
-            try:
-                self._commit(version, actions)
-                return version
-            except DeltaConcurrentCommit as e:
-                last_err = e  # re-derive actions against new snapshot
-        raise last_err  # type: ignore[misc]
+            return actions + adds
+
+        return self._optimistic_commit("WRITE", derive,
+                                       {"mode": mode.upper()})
 
     @staticmethod
     def _check_writable(snap: dict, operation: str) -> None:
@@ -1966,20 +1993,15 @@ class DeltaTable:
         :class:`DeltaConcurrentCommit` if a racer touches any
         affected file between the scan and the commit."""
         table_path = os.path.abspath(self.path)
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
-            cur = self._replay()
+
+        def derive(cur):
             by_path = {f["path"]: f for f in cur["files"]}
             now = int(time.time() * 1000)
-            actions: list[dict] = [{"commitInfo": {
-                "timestamp": now, "operation": operation,
-                "operationParameters": {},
-                "engineInfo": "python-minerva-etl-spark"}}]
             need_r = {"deletionVectors"} if touched else set()
             need_w = set(need_r)
             if cdf:
                 need_w.add("changeDataFeed")
-            actions += self._upgrade_actions(
+            actions = self._upgrade_actions(
                 cur, need_r, need_w,
                 {"delta.enableDeletionVectors": "true"}
                 if touched else None)
@@ -1992,11 +2014,7 @@ class DeltaTable:
                         f"data file {rel!r} changed (rewritten, "
                         f"removed, or re-deleted) since this "
                         f"{operation} scanned it — rerun")
-                remove = {"path": rel, "deletionTimestamp": now,
-                          "dataChange": True}
-                if f.get("deletionVector"):
-                    remove["deletionVector"] = f["deletionVector"]
-                actions.append({"remove": remove})
+                actions.append(_remove(f, now))
                 add = dict(f)
                 add["deletionVector"] = json.loads(row["_dv"])
                 add["dataChange"] = True
@@ -2011,14 +2029,9 @@ class DeltaTable:
                     except (ValueError, TypeError):
                         pass
                 actions.append({"add": add})
-            actions += extra_actions
-            version = self._next_version()
-            try:
-                self._commit(version, actions)
-                return version
-            except DeltaConcurrentCommit as e:
-                last_err = e  # re-derive against the new snapshot
-        raise last_err  # type: ignore[misc]
+            return actions + extra_actions
+
+        return self._optimistic_commit(operation, derive)
 
     def delete(self, spark: SparkSession, where) -> int | None:
         """Merge-on-read DELETE: rows matching ``where`` (a Column or
@@ -2421,9 +2434,7 @@ class DeltaTable:
                 "without validating existing rows — use "
                 "add_constraint(spark, name, expr), which scans the "
                 "table first")
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
-            cur = self._replay()
+        def derive(cur):
             self._check_writable(cur, "set_properties")
             need_w = builtins.set()
             if str(props.get("delta.enableChangeDataFeed", "")
@@ -2431,20 +2442,9 @@ class DeltaTable:
                 need_w.add("changeDataFeed")
             up = self._upgrade_actions(cur, builtins.set(), need_w,
                                        props)
-            if not up:
-                return cur["version"]  # already at requested state
-            actions = [{"commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "SET TBLPROPERTIES",
-                "operationParameters": {},
-                "engineInfo": "python-minerva-etl-spark"}}] + up
-            version = self._next_version()
-            try:
-                self._commit(version, actions)
-                return version
-            except DeltaConcurrentCommit as e:
-                last_err = e
-        raise last_err  # type: ignore[misc]
+            return up or cur["version"]  # already at requested state
+
+        return self._optimistic_commit("SET TBLPROPERTIES", derive)
 
     def add_constraint(self, spark: SparkSession, name: str,
                        expr: str) -> int:
@@ -2461,9 +2461,7 @@ class DeltaTable:
             raise ValueError(
                 f"constraint name {name!r} must be alphanumeric/_")
         key = f"delta.constraints.{name.lower()}"
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
-            cur = self._replay()
+        def derive(cur):
             self._check_writable(cur, "add_constraint")
             conf = cur["metaData"].get("configuration") or {}
             if conf.get(key) == expr:
@@ -2475,30 +2473,19 @@ class DeltaTable:
                 raise ValueError(
                     f"add_constraint {name!r}: existing rows violate "
                     f"{expr!r} — nothing was committed")
-            up = self._upgrade_actions(
+            return self._upgrade_actions(
                 cur, builtins.set(), {"checkConstraints"},
                 {key: expr})
-            actions = [{"commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "ADD CONSTRAINT",
-                "operationParameters": {"name": name, "expr": expr},
-                "engineInfo": "python-minerva-etl-spark"}}] + up
-            version = self._next_version()
-            try:
-                self._commit(version, actions)
-                return version
-            except DeltaConcurrentCommit as e:
-                last_err = e
-        raise last_err  # type: ignore[misc]
+
+        return self._optimistic_commit(
+            "ADD CONSTRAINT", derive, {"name": name, "expr": expr})
 
     def drop_constraint(self, name: str) -> int | None:
         """ALTER TABLE DROP CONSTRAINT: removes
         ``delta.constraints.<name>`` with a metaData commit (None
         when the constraint does not exist — a drop is idempotent)."""
         key = f"delta.constraints.{name.lower()}"
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
-            cur = self._replay()
+        def derive(cur):
             self._check_writable(cur, "drop_constraint")
             conf = dict(cur["metaData"].get("configuration") or {})
             if key not in conf:
@@ -2506,19 +2493,10 @@ class DeltaTable:
             del conf[key]
             meta = dict(cur["metaData"])
             meta["configuration"] = conf
-            actions = [{"commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "DROP CONSTRAINT",
-                "operationParameters": {"name": name},
-                "engineInfo": "python-minerva-etl-spark"}},
-                {"metaData": meta}]
-            version = self._next_version()
-            try:
-                self._commit(version, actions)
-                return version
-            except DeltaConcurrentCommit as e:
-                last_err = e
-        raise last_err  # type: ignore[misc]
+            return [{"metaData": meta}]
+
+        return self._optimistic_commit("DROP CONSTRAINT", derive,
+                                       {"name": name})
 
     def _add_versions(self) -> dict[str, int]:
         """path → latest commit version carrying an ``add`` for it,
@@ -2723,36 +2701,22 @@ class DeltaTable:
                 a["add"]["dataChange"] = False
                 new_adds.append(a)
             rewritten.extend(f["path"] for f in fs)
-        last_err: Exception | None = None
-        for _ in range(_COMMIT_RETRIES):
-            cur = self._replay()
+        def derive(cur):
             by_path = {f["path"]: f for f in cur["files"]}
             now = int(time.time() * 1000)
-            actions: list[dict] = [{"commitInfo": {
-                "timestamp": now, "operation": "OPTIMIZE",
-                "operationParameters": (
-                    {"zOrderBy": json.dumps(zorder_by)}
-                    if zorder_by else {}),
-                "engineInfo": "python-minerva-etl-spark"}}]
+            actions = []
             for rel in rewritten:
                 f = by_path.get(rel)
                 if f is None or f.get("deletionVector") != old_dv.get(rel):
                     raise DeltaConcurrentCommit(
                         f"data file {rel!r} changed since OPTIMIZE "
                         "scanned it — rerun optimize()")
-                rm = {"path": rel, "deletionTimestamp": now,
-                      "dataChange": False}
-                if f.get("deletionVector"):
-                    rm["deletionVector"] = f["deletionVector"]
-                actions.append({"remove": rm})
-            actions.extend(new_adds)
-            version = self._next_version()
-            try:
-                self._commit(version, actions)
-                return version
-            except DeltaConcurrentCommit as e:
-                last_err = e
-        raise last_err  # type: ignore[misc]
+                actions.append(_remove(f, now, data_change=False))
+            return actions + new_adds
+
+        return self._optimistic_commit(
+            "OPTIMIZE", derive,
+            {"zOrderBy": json.dumps(zorder_by)} if zorder_by else None)
 
     def vacuum(self, retention_hours: float = 168,
                now_ms: int | None = None,

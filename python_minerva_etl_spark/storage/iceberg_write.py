@@ -40,15 +40,41 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .core import (avro_encode, container_block, container_header,
-                   footer_stats, publish_if_absent, zorder_cluster,
-                   zorder_proxy_sql)
+from .core import (LostRace, avro_encode, commit_with_retries,
+                   container_block, container_header, footer_stats,
+                   publish_if_absent, zorder_cluster, zorder_proxy_sql)
 from .iceberg import (IcebergTable, _localize, _to_spark_schema,
                       prune_files)
 
 
 class IcebergConcurrentCommit(FileExistsError):
-    """Another writer committed the same metadata version first."""
+    """Another writer committed the same metadata version first, or
+    changed what a DML or compaction scanned (rerun it)."""
+
+
+def _optimistic_commit(table: IcebergTable, publish, check=None):
+    """Every Iceberg commit, under :func:`.core.commit_with_retries`:
+    each attempt re-reads the metadata (None before the first commit),
+    runs the stale-scan ``check(md)`` and CAS-commits through
+    ``publish(md, base_version)``.  Only the :func:`_cas_metadata`
+    lost race inside ``publish`` is retried."""
+    def attempt():
+        try:
+            # the version first: metadata read newer than it can only
+            # lose the CAS, never commit over a racer's snapshot
+            base_version = _version_of(table._metadata_path())
+        except FileNotFoundError:
+            md, base_version = None, 0
+        else:
+            md = table.metadata()
+        if check is not None:
+            check(md)
+        try:
+            return publish(md, base_version)
+        except IcebergConcurrentCommit as e:
+            return LostRace(e)
+
+    return commit_with_retries(attempt)
 
 
 # ------------------------------------------------------------ avro writer
@@ -721,7 +747,6 @@ def _evolve_schema(ice_schema: dict, df_schema: T.StructType) -> dict:
 
 
 def write_iceberg(spark: SparkSession, df: DataFrame, path: str,
-                  max_commit_attempts: int = 5,
                   partition_by: str | None = None,
                   merge_schema: bool = False) -> None:
     """Append ``df`` to the Iceberg table at ``path``, creating the
@@ -756,17 +781,15 @@ def write_iceberg(spark: SparkSession, df: DataFrame, path: str,
     fields (old files read null), batches may omit optional columns
     (new files read null); the commit publishes the evolved schema
     with a bumped schema-id and last-column-id."""
-    ice_schema, part = _precheck_append(path, df.schema, partition_by,
-                                        merge_schema)
+    ice_schema, part = precheck_append(path, df.schema, partition_by,
+                                       merge_schema)
     data_files = _stage_data_files(df, path, part, ice_schema)
     bound_entries(data_files, ice_schema)
-    _commit_staged(path, data_files, ice_schema, part,
-                   max_commit_attempts,
-                   df_schema=df.schema if merge_schema else None)
+    commit_staged(path, data_files, ice_schema, part,
+                  df_schema=df.schema if merge_schema else None)
 
 
 def overwrite_iceberg(spark: SparkSession, df: DataFrame, path: str,
-                      max_commit_attempts: int = 5,
                       partition_by: str | None = None) -> None:
     """TRUNCATE-and-replace: commit ONE ``overwrite`` snapshot whose
     manifest list holds ONLY the new data manifest — every previously
@@ -781,31 +804,21 @@ def overwrite_iceberg(spark: SparkSession, df: DataFrame, path: str,
     if not (os.path.isdir(mdir)
             and any(n.endswith(".metadata.json")
                     for n in os.listdir(mdir))):
-        write_iceberg(spark, df, path, max_commit_attempts,
-                      partition_by)
+        write_iceberg(spark, df, path, partition_by=partition_by)
         return
-    ice_schema, part = _precheck_append(path, df.schema, partition_by)
+    ice_schema, part = precheck_append(path, df.schema, partition_by)
     data_files = _stage_data_files(df, path, part, ice_schema)
     bound_entries(data_files, ice_schema)
     table = IcebergTable(path)
-    for _ in range(max_commit_attempts):
-        md = table.metadata()
-        base_version = _version_of(table._metadata_path())
-        try:
-            _commit_append(table, md, data_files, base_version,
-                           part, carry=False, operation="overwrite")
-            return
-        except IcebergConcurrentCommit:
-            continue
-    raise IcebergConcurrentCommit(
-        f"iceberg overwrite: lost the commit race "
-        f"{max_commit_attempts} times at {path!r}")
+    _optimistic_commit(table, lambda md, base_version: _commit_append(
+        table, md, data_files, base_version, part, carry=False,
+        operation="overwrite"))
 
 
-def _precheck_append(path: str, df_schema: T.StructType,
-                     partition_by: str | None,
-                     merge_schema: bool = False
-                     ) -> tuple[dict, "_PartField | None"]:
+def precheck_append(path: str, df_schema: T.StructType,
+                    partition_by: str | None,
+                    merge_schema: bool = False
+                    ) -> tuple[dict, "_PartField | None"]:
     """The fail-fast half of :func:`write_iceberg` (shared with the
     registered data source's writer, which runs it at planning time
     BEFORE executors stage anything): schema compatibility against an
@@ -859,34 +872,22 @@ def _precheck_append(path: str, df_schema: T.StructType,
     return ice_schema, part
 
 
-def _commit_staged(path: str, data_files: list[dict],
-                   ice_schema: dict, part: "_PartField | None",
-                   max_commit_attempts: int = 5,
-                   df_schema: T.StructType | None = None,
-                   extra_summary: dict | None = None) -> None:
-    """The CAS retry half of :func:`write_iceberg`, given
-    already-staged manifest entries (with bounds).  ``df_schema``
-    (merge-schema appends only) lets a retry RE-derive the evolved
-    schema against freshly-read metadata — a racer may have evolved
-    the table first, and blindly committing our pre-race schema
-    would drop their columns."""
+def commit_staged(path: str, data_files: list[dict],
+                  ice_schema: dict, part: "_PartField | None",
+                  df_schema: T.StructType | None = None,
+                  extra_summary: dict | None = None) -> None:
+    """The commit half of :func:`write_iceberg`, given already-staged
+    manifest entries (with bounds); shared with the
+    ``minerva_iceberg`` writer.  ``df_schema`` (merge-schema appends
+    only) lets a retry RE-derive the evolved schema against
+    freshly-read metadata — a racer may have evolved the table first,
+    and blindly committing our pre-race schema would drop their
+    columns."""
     table = IcebergTable(path)
-    mdir = os.path.join(path, "metadata")
-    for _ in range(max_commit_attempts):
+
+    def publish(md, base_version):
         schema_patch = None
-        if any(n.endswith(".metadata.json") for n in os.listdir(mdir)):
-            md = table.metadata()
-            base_version = _version_of(table._metadata_path())
-            if df_schema is not None:
-                cur = table._current_schema(md)
-                evolved = _evolve_schema(cur, df_schema)
-                if evolved is not cur:
-                    ice_schema = evolved
-                    schema_patch = evolved
-                else:
-                    ice_schema = cur
-        else:
-            base_version = 0
+        if md is None:
             md = {
                 "format-version": 2,
                 "table-uuid": str(uuid.uuid4()),
@@ -909,16 +910,16 @@ def _commit_staged(path: str, data_files: list[dict],
                 "snapshots": [],
                 "current-snapshot-id": -1,
             }
-        try:
-            _commit_append(table, md, data_files, base_version,
-                           part, schema_patch=schema_patch,
-                           extra_summary=extra_summary)
-            return
-        except IcebergConcurrentCommit:
-            continue
-    raise IcebergConcurrentCommit(
-        f"iceberg append: lost the commit race "
-        f"{max_commit_attempts} times at {path!r}")
+        elif df_schema is not None:
+            cur = table._current_schema(md)
+            evolved = _evolve_schema(cur, df_schema)
+            if evolved is not cur:
+                schema_patch = evolved
+        _commit_append(table, md, data_files, base_version, part,
+                       schema_patch=schema_patch,
+                       extra_summary=extra_summary)
+
+    _optimistic_commit(table, publish)
 
 
 def _last_column_id(ice_schema: dict) -> int:
@@ -971,12 +972,13 @@ def _commit_append(table: IcebergTable, md: dict,
                    carry: bool = True,
                    operation: str = "append",
                    schema_patch: dict | None = None,
-                   extra_summary: dict | None = None) -> None:
+                   extra_summary: dict | None = None) -> int:
     """Commit one snapshot on top of ``md``, which was read from
-    metadata version ``base_version``.  ``carry=True`` is a fast
-    append (the previous snapshot's manifests carry over unchanged);
-    ``carry=False`` with ``operation="replace"`` makes the new
-    manifest the ONLY one — the compaction commit shape.
+    metadata version ``base_version``, and return its snapshot id.
+    ``carry=True`` is a fast append (the previous snapshot's
+    manifests carry over unchanged); ``carry=False`` with
+    ``operation="replace"`` makes the new manifest the ONLY one — the
+    compaction commit shape.
     ``schema_patch`` (merge-schema appends) publishes an evolved
     schema alongside the snapshot: appended to ``schemas`` under a
     bumped schema-id, made current, last-column-id raised."""
@@ -1068,6 +1070,7 @@ def _commit_append(table: IcebergTable, md: dict,
     new_md["current-snapshot-id"] = snap_id
     _cas_metadata(table, new_md, base_version,
                   cleanup=(manifest, mlist))
+    return snap_id
 
 
 def _cas_metadata(table: IcebergTable, new_md: dict,
@@ -1376,51 +1379,42 @@ def _commit_row_dml(table: IcebergTable, md: dict,
 def _retry_row_dml(table: IcebergTable, data_entries: list[dict],
                    del_entries: list[dict],
                    part_info: "_PartField | None",
-                   operation: str, max_commit_attempts: int,
-                   verb: str,
+                   operation: str, verb: str,
                    referenced_paths: "set[str] | None" = None) -> int:
-    """The optimistic-concurrency tail every DML verb shares: re-read
-    metadata, CAS at base_version+1, retry on a lost race with the
-    already-staged files (immutable and uniquely named — a retry
+    """The commit every DML verb shares: CAS at base_version+1 with
+    the already-staged files (immutable and uniquely named — a retry
     never rewrites them).
 
-    Before EVERY commit attempt (first included — the CAS re-reads
-    metadata, so a race that landed between the DML's scan and its
-    first commit would otherwise succeed) the data files addressed by
-    the staged position deletes (``referenced_paths``) are validated
-    against the refreshed snapshot's live file set — a concurrent
-    ``compact_iceberg``/overwrite replaces those files, and blindly
-    committing the stale deletes would silently resurrect the
-    deleted/updated rows (the compaction itself checks snapshot-id
-    the same way)."""
-    for _ in range(max_commit_attempts):
-        md = table.metadata()
-        if referenced_paths:
-            cur_files, _ = table._data_files(table._snapshot(md, None))
-            gone = referenced_paths - {f["file_path"]
-                                       for f in cur_files}
-            if gone:
-                raise IcebergConcurrentCommit(
-                    f"iceberg {verb}: a concurrent commit rewrote "
-                    f"{len(gone)} data file(s) this DML's position "
-                    f"deletes address (e.g. {sorted(gone)[0]!r}) — "
-                    f"the staged deletes are stale; rerun the DML "
-                    f"against the new snapshot")
-        base_version = _version_of(table._metadata_path())
-        try:
-            return _commit_row_dml(table, md, data_entries,
-                                   del_entries, part_info,
-                                   base_version, operation)
-        except IcebergConcurrentCommit:
-            continue
-    raise IcebergConcurrentCommit(
-        f"iceberg {verb}: lost the commit race "
-        f"{max_commit_attempts} times at {table.path!r}")
+    Before EVERY commit attempt (first included — a race that landed
+    between the DML's scan and its first commit would otherwise
+    succeed) the data files addressed by the staged position deletes
+    (``referenced_paths``) are validated against the refreshed
+    snapshot's live file set — a concurrent ``compact_iceberg``/
+    overwrite replaces those files, and blindly committing the stale
+    deletes would silently resurrect the deleted/updated rows (the
+    compaction itself checks snapshot-id the same way)."""
+    def check(md):
+        if not referenced_paths:
+            return
+        cur_files, _ = table._data_files(table._snapshot(md, None))
+        gone = referenced_paths - {f["file_path"] for f in cur_files}
+        if gone:
+            raise IcebergConcurrentCommit(
+                f"iceberg {verb}: a concurrent commit rewrote "
+                f"{len(gone)} data file(s) this DML's position "
+                f"deletes address (e.g. {sorted(gone)[0]!r}) — "
+                f"the staged deletes are stale; rerun the DML "
+                f"against the new snapshot")
+
+    return _optimistic_commit(
+        table, lambda md, base_version: _commit_row_dml(
+            table, md, data_entries, del_entries, part_info,
+            base_version, operation),
+        check)
 
 
 def delete_iceberg(spark: SparkSession, path: str,
                    where: list[tuple],
-                   max_commit_attempts: int = 5,
                    equality: bool = False) -> int:
     """Merge-on-read DELETE: write position-delete files for every
     live row matching ``where`` (the same ``(column, op, literal)``
@@ -1464,8 +1458,7 @@ def delete_iceberg(spark: SparkSession, path: str,
             [tuple(lit for _c, _op, lit in where)],
             T.StructType([T.StructField(c, by_name[c])
                           for c, _op, _lit in where]))
-        equality_delete_iceberg(spark, path, keys,
-                                max_commit_attempts=max_commit_attempts)
+        equality_delete_iceberg(spark, path, keys)
         return 1
     live, files = _live_rows(spark, table, md, list(where))
     if live is None:
@@ -1474,15 +1467,13 @@ def delete_iceberg(spark: SparkSession, path: str,
         spark, path, _position_hits(spark, live, files))
     if not del_entries:
         return 0
-    _retry_row_dml(table, [], del_entries, None, "delete",
-                   max_commit_attempts, "delete",
+    _retry_row_dml(table, [], del_entries, None, "delete", "delete",
                    referenced_paths=refd)
     return n_deleted
 
 
 def equality_delete_iceberg(spark: SparkSession, path: str,
-                            keys: DataFrame,
-                            max_commit_attempts: int = 5) -> int:
+                            keys: DataFrame) -> int:
     """BLIND equality delete (Iceberg spec "Equality Delete Files"):
     every table row whose values match ANY row of ``keys`` on all of
     ``keys``' columns (null-safe: a null key value means IS NULL) is
@@ -1554,12 +1545,11 @@ def equality_delete_iceberg(spark: SparkSession, path: str,
     if not del_entries:
         raise ValueError("iceberg equality delete: empty key set")
     return _retry_row_dml(table, [], del_entries, None, "delete",
-                          max_commit_attempts, "equality-delete")
+                          "equality-delete")
 
 
 def update_iceberg(spark: SparkSession, path: str, set: dict,
-                   where: list[tuple] | None = None,
-                   max_commit_attempts: int = 5) -> int:
+                   where: list[tuple] | None = None) -> int:
     """Merge-on-read UPDATE ... SET: rows matching ``where`` are
     masked out of their files via position deletes and the rewritten
     rows (the ``set`` expressions — {column: Column or SQL string},
@@ -1611,7 +1601,7 @@ def update_iceberg(spark: SparkSession, path: str, set: dict,
     finally:
         matched.unpersist()
     _retry_row_dml(table, data_entries, del_entries, part_info,
-                   "overwrite", max_commit_attempts, "update",
+                   "overwrite", "update",
                    referenced_paths=refd)
     return n
 
@@ -1619,8 +1609,7 @@ def update_iceberg(spark: SparkSession, path: str, set: dict,
 def merge_iceberg(spark: SparkSession, path: str, source: DataFrame,
                   on, when_matched_update: dict | None = None,
                   when_matched_delete=None,
-                  when_not_matched_insert=True,
-                  max_commit_attempts: int = 5) -> int | None:
+                  when_not_matched_insert=True) -> int | None:
     """MERGE INTO the Iceberg table USING ``source`` ON ``on`` (a SQL
     string or Column over the aliases ``t`` = target, ``s`` = source
     — qualify ambiguous names), with the same clause semantics as the
@@ -1774,8 +1763,7 @@ def merge_iceberg(spark: SparkSession, path: str, source: DataFrame,
         return None
     operation = "append" if not del_entries else "overwrite"
     return _retry_row_dml(table, data_entries, del_entries,
-                          part_info, operation,
-                          max_commit_attempts, "merge",
+                          part_info, operation, "merge",
                           referenced_paths=refd)
 
 
@@ -1783,7 +1771,6 @@ def merge_iceberg(spark: SparkSession, path: str, source: DataFrame,
 
 
 def compact_iceberg(spark: SparkSession, path: str,
-                    max_commit_attempts: int = 5,
                     zorder_by: list[str] | None = None,
                     target_file_bytes: int = 256 << 20,
                     incremental: bool = False) -> int | None:
@@ -1892,33 +1879,26 @@ def compact_iceberg(spark: SparkSession, path: str,
         df = table.read(spark)
         staged = _stage_data_files(df, path, part_info, ice_schema)
     bound_entries(staged, ice_schema)
-    for _ in range(max_commit_attempts):
-        cur_md = table.metadata()
-        cur = table._snapshot(cur_md, None)
-        if cur.get("snapshot-id") != snap.get("snapshot-id"):
+
+    def check(md):
+        if table._snapshot(md, None).get("snapshot-id") \
+                != snap.get("snapshot-id"):
             raise IcebergConcurrentCommit(
                 "iceberg compact: the table advanced since the "
                 "compaction scanned it — rerun compact_iceberg")
-        base_version = _version_of(table._metadata_path())
-        try:
-            if rewritten is not None:
-                _commit_zorder_incremental(table, cur_md, staged,
-                                           base_version, rewritten,
-                                           zorder_by, part_info)
-            else:
-                _commit_append(
-                    table, cur_md, staged, base_version,
-                    part_info, carry=False, operation="replace",
-                    extra_summary=(
-                        {"zorder-by": json.dumps(zorder_by)}
-                        if zorder_by else None))
-            return table._snapshot(table.metadata(),
-                                   None).get("snapshot-id")
-        except IcebergConcurrentCommit:
-            continue
-    raise IcebergConcurrentCommit(
-        f"iceberg compact: lost the commit race "
-        f"{max_commit_attempts} times at {path!r}")
+
+    def publish(md, base_version):
+        if rewritten is not None:
+            return _commit_zorder_incremental(
+                table, md, staged, base_version, rewritten, zorder_by,
+                part_info)
+        return _commit_append(
+            table, md, staged, base_version, part_info, carry=False,
+            operation="replace",
+            extra_summary=({"zorder-by": json.dumps(zorder_by)}
+                           if zorder_by else None))
+
+    return _optimistic_commit(table, publish, check)
 
 
 def _last_zorder_snapshot(md: dict, zorder_by: list[str]) -> dict | None:
@@ -1952,14 +1932,14 @@ def _commit_zorder_incremental(table: IcebergTable, md: dict,
                                rewritten: set[str],
                                zorder_by: list[str],
                                part_info: "_PartField | None" = None
-                               ) -> None:
+                               ) -> int:
     """One REPLACE snapshot for an incremental clustering pass: the
     new clustered manifest, every old DATA manifest rewritten to drop
     the absorbed entries (SCHEMA-PRESERVING — the old manifest's own
     Avro schema re-encodes the survivors, so foreign column stats are
     never lost — with EXPLICIT per-entry sequence numbers so ordering
     survives the move), untouched data manifests and all DELETE
-    manifests carried verbatim."""
+    manifests carried verbatim.  Returns the snapshot id."""
     from .iceberg import avro_read
 
     mdir = os.path.join(table.path, "metadata")
@@ -2069,6 +2049,7 @@ def _commit_zorder_incremental(table: IcebergTable, md: dict,
     new_md["current-snapshot-id"] = snap_id
     _cas_metadata(table, new_md, base_version,
                   cleanup=tuple(cleanup))
+    return snap_id
 
 
 def compaction_stats(path: str) -> dict:
@@ -2100,8 +2081,7 @@ def compaction_stats(path: str) -> dict:
 
 def maybe_compact_iceberg(spark: SparkSession, path: str,
                           max_delete_files: int = 8,
-                          max_deleted_ratio: float = 0.10,
-                          max_commit_attempts: int = 5
+                          max_deleted_ratio: float = 0.10
                           ) -> int | None:
     """Threshold-policy compaction for merge-on-read tables (the
     cadence hook the CDC-upsert story needs: every equality-delete
@@ -2123,8 +2103,7 @@ def maybe_compact_iceberg(spark: SparkSession, path: str,
     if st["delete_files"] <= max_delete_files \
             and st["deleted_ratio"] <= max_deleted_ratio:
         return None
-    return compact_iceberg(spark, path,
-                           max_commit_attempts=max_commit_attempts)
+    return compact_iceberg(spark, path)
 
 
 def maybe_zorder_iceberg(spark: SparkSession, path: str,

@@ -31,7 +31,9 @@ dependency-free:
   the manifests it missed; if none of the newly-added files overlaps
   the batch envelope the merge result is still valid and the commit is
   retried on top, otherwise :class:`CommitConflict` is raised for the
-  caller to re-run (Delta's write-conflict semantics).
+  caller to re-run (Delta's write-conflict semantics).  Every commit
+  makes at most ``core.COMMIT_ATTEMPTS`` attempts, then raises
+  :class:`CommitConflict`.
 * **Time travel** — ``read(spark, version=N)`` reads any retained
   snapshot; ``history()`` lists them.
 """
@@ -49,11 +51,13 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .core import footer_stats, may_match, publish_if_absent
+from .core import (LostRace, commit_with_retries, footer_stats, may_match,
+                   publish_if_absent)
 
 
 class CommitConflict(RuntimeError):
-    """A concurrent commit added files overlapping this merge's keys."""
+    """A concurrent commit added files overlapping this merge's keys,
+    or every commit attempt lost the race for its version."""
 
 
 _EPOCH = datetime.datetime(1970, 1, 1)
@@ -85,6 +89,17 @@ def _canon_col(df: DataFrame, col: str):
         # datetime.date.toordinal(): 1970-01-01 is day 719163
         return F.datediff(F.col(col), F.lit("1970-01-01")) + F.lit(719163)
     return F.col(col)
+
+
+def _key_envelope(df: DataFrame, key: list[str]) -> dict[str, list[Any]]:
+    """Per-key-column canonical [min, max] over ``df`` — the key range
+    a merge or delete can touch; all-null columns are left out."""
+    row = df.select(
+        *[F.min(_canon_col(df, c)).alias(f"lo_{c}") for c in key],
+        *[F.max(_canon_col(df, c)).alias(f"hi_{c}") for c in key],
+    ).collect()[0]
+    return {c: [_canon(row[f"lo_{c}"]), _canon(row[f"hi_{c}"])]
+            for c in key if row[f"lo_{c}"] is not None}
 
 
 def _file_stats(path: str, key: list[str]) -> tuple[int, dict[str, list[Any]]]:
@@ -406,6 +421,28 @@ class SnapTable:
             os.path.join(self._mdir, f"v{version:08d}.json"),
             json.dumps(manifest))
 
+    def _optimistic_commit(self, derive,
+                           txn: tuple[str, int] | None = None) -> int:
+        """Every SnapTable commit, under :func:`.core.commit_with_retries`:
+        each attempt re-reads the latest version ``prev`` and the txn
+        ledger, and ``derive(prev)`` returns the manifest to publish as
+        ``prev + 1`` (or, with nothing to commit, the version to
+        return).  Only a False :meth:`_publish` is retried."""
+        def attempt():
+            prev = self.latest_version() or 0
+            if self._txn_seen(txn, prev or None):
+                return prev
+            manifest = derive(prev)
+            if not isinstance(manifest, dict):
+                return manifest
+            if self._publish(manifest, prev + 1):
+                return prev + 1
+            return LostRace(CommitConflict(
+                f"snaptable {self.path}: concurrent commit at version "
+                f"{prev + 1}"))
+
+        return commit_with_retries(attempt)
+
     def txns(self, version: int | None = None) -> dict[str, int]:
         """Writer-app -> last committed batch id, carried forward in
         every manifest (the Delta `txn` action analog): the idempotence
@@ -439,18 +476,17 @@ class SnapTable:
         if self._txn_seen(txn, self.latest_version()):
             return self.latest_version()
         new = self._write_data(df, list(key))
-        while True:
-            v = (self.latest_version() or 0) + 1
-            if self._txn_seen(txn, v - 1 if v > 1 else None):
-                return v - 1
-            files = self.files(v - 1) if v > 1 else []
-            manifest = {"version": v, "op": "append", "files": files + new,
+
+        def derive(prev):
+            files = self.files(prev) if prev else []
+            manifest = {"version": prev + 1, "op": "append",
+                        "files": files + new,
                         "n_files": len(files) + len(new)}
             if key:
                 manifest["key"] = list(key)
-            ok = self._publish(self._with_txn(manifest, txn, v - 1), v)
-            if ok:
-                return v
+            return self._with_txn(manifest, txn, prev)
+
+        return self._optimistic_commit(derive, txn)
 
     def merge(self, spark: SparkSession, batch: DataFrame, key: list[str],
               seq_col: str, txn: tuple[str, int] | None = None) -> int:
@@ -469,17 +505,10 @@ class SnapTable:
             resolved = argmax_resolve(batch, key, [seq_col])
             return self.append(spark, resolved, key, txn=txn)
 
-        env_row = batch.select(
-            *[F.min(_canon_col(batch, c)).alias(f"lo_{c}") for c in key],
-            *[F.max(_canon_col(batch, c)).alias(f"hi_{c}") for c in key],
-        ).collect()[0]
-        envelope = {c: [_canon(env_row[f"lo_{c}"]), _canon(env_row[f"hi_{c}"])]
-                    for c in key if env_row[f"lo_{c}"] is not None}
-
+        envelope = _key_envelope(batch, key)
         base = self.latest_version()
         entries = self.files(base)
         touched = [e for e in entries if _overlaps(e["stats"], envelope)]
-        carried = [e for e in entries if not _overlaps(e["stats"], envelope)]
 
         if touched:
             stored = spark.read.option("mergeSchema", "true").parquet(
@@ -493,28 +522,8 @@ class SnapTable:
         resolved = argmax_resolve(combined, key,
                                   ["__src", seq_col]).drop("__src")
         new = self._write_data(resolved, key)
-
-        del carried  # recomputed from the current snapshot each attempt
-        t_paths = {e["path"] for e in touched}
-        base_paths = {e["path"] for e in entries}
-        while True:
-            v = (self.latest_version() or 0) + 1
-            if self._txn_seen(txn, v - 1 if v > 1 else None):
-                return v - 1
-            cur = self.files(v - 1) if v > 1 else []
-            if v - 1 != base:  # lost the race: check the commits we missed
-                for e in cur:
-                    if (e["path"] not in base_paths
-                            and _overlaps(e["stats"], envelope)):
-                        raise CommitConflict(
-                            f"concurrent commit touched merge key range: "
-                            f"{e['path']}")
-            files = [e for e in cur if e["path"] not in t_paths] + new
-            if self._publish(self._with_txn(
-                    {"version": v, "op": "merge", "files": files,
-                     "n_files": len(files), "key": list(key)},
-                    txn, v - 1), v):
-                return v
+        return self._commit_rewrite("merge", key, envelope, base, entries,
+                                    touched, new, txn)
 
     def apply_changes(self, spark: SparkSession, changes: DataFrame,
                       key: list[str], seq_col: str,
@@ -562,12 +571,7 @@ class SnapTable:
         if base is None:
             raise FileNotFoundError(f"snaptable {self.path}: no snapshot")
         kdf = keys.select(*key).distinct()
-        env_row = kdf.select(
-            *[F.min(_canon_col(kdf, c)).alias(f"lo_{c}") for c in key],
-            *[F.max(_canon_col(kdf, c)).alias(f"hi_{c}") for c in key],
-        ).collect()[0]
-        envelope = {c: [_canon(env_row[f"lo_{c}"]), _canon(env_row[f"hi_{c}"])]
-                    for c in key if env_row[f"lo_{c}"] is not None}
+        envelope = _key_envelope(kdf, key)
         entries = self.files(base)
         touched = [e for e in entries if _overlaps(e["stats"], envelope)]
         new: list[dict] = []
@@ -576,26 +580,35 @@ class SnapTable:
                 *[os.path.join(self.path, e["path"]) for e in touched])
             kept = stored.join(F.broadcast(kdf), key, "left_anti")
             new = self._write_data(kept, key)
+        return self._commit_rewrite("delete", key, envelope, base, entries,
+                                    touched, new, txn)
+
+    def _commit_rewrite(self, op: str, key: list[str], envelope: dict,
+                        base: int, entries: list[dict],
+                        touched: list[dict], new: list[dict],
+                        txn: tuple[str, int] | None) -> int:
+        """The commit of :meth:`merge` and :meth:`delete`: ``new``
+        replaces the ``touched`` files of snapshot ``base``.  A commit
+        that landed since ``base`` with files overlapping the key
+        ``envelope`` raises :class:`CommitConflict`."""
         t_paths = {e["path"] for e in touched}
         base_paths = {e["path"] for e in entries}
-        while True:
-            v = (self.latest_version() or 0) + 1
-            if self._txn_seen(txn, v - 1 if v > 1 else None):
-                return v - 1
-            cur = self.files(v - 1) if v > 1 else []
-            if v - 1 != base:  # lost the race: check the commits we missed
+
+        def derive(prev):
+            cur = self.files(prev) if prev else []
+            if prev != base:  # check the commits we missed
                 for e in cur:
                     if (e["path"] not in base_paths
                             and _overlaps(e["stats"], envelope)):
                         raise CommitConflict(
-                            f"concurrent commit touched delete key range: "
+                            f"concurrent commit touched {op} key range: "
                             f"{e['path']}")
             files = [e for e in cur if e["path"] not in t_paths] + new
-            if self._publish(self._with_txn(
-                    {"version": v, "op": "delete", "files": files,
-                     "n_files": len(files), "key": list(key)},
-                    txn, v - 1), v):
-                return v
+            return self._with_txn(
+                {"version": prev + 1, "op": op, "files": files,
+                 "n_files": len(files), "key": list(key)}, txn, prev)
+
+        return self._optimistic_commit(derive, txn)
 
     # ---------------- change feed ----------------
 
@@ -699,21 +712,22 @@ class SnapTable:
         n_out = max(1, -(-total // target_file_bytes))
         new = self._write_data(packed.repartition(n_out), key)
         s_paths = {e["path"] for e in small}
-        while True:
-            v = (self.latest_version() or 0) + 1
-            cur = self.files(v - 1) if v > 1 else []
-            if any(e["path"] not in {x["path"] for x in entries}
-                   for e in cur):
+        base_paths = {e["path"] for e in entries}
+
+        def derive(prev):
+            cur = self.files(prev) if prev else []
+            if any(e["path"] not in base_paths for e in cur):
                 # a concurrent commit landed: packing a stale file set
                 # could resurrect replaced rows — bail, caller retries
                 raise CommitConflict("concurrent commit during optimize")
             files = [e for e in cur if e["path"] not in s_paths] + new
-            manifest = {"version": v, "op": "optimize", "files": files,
-                        "n_files": len(files)}
+            manifest = {"version": prev + 1, "op": "optimize",
+                        "files": files, "n_files": len(files)}
             if key:
                 manifest["key"] = key
-            if self._publish(self._with_txn(manifest, None, v - 1), v):
-                return v
+            return self._with_txn(manifest, None, prev)
+
+        return self._optimistic_commit(derive)
 
     def sync_from(self, spark: SparkSession, upstream: "SnapTable",
                   key: list[str], seq_col: str) -> int:
@@ -766,14 +780,13 @@ class SnapTable:
         written; concurrent-writer safety via the same atomic
         publish."""
         old = self._manifest(to_version)  # raises on unknown version
-        while True:
-            latest = self.latest_version() or 0
-            if to_version == latest:
-                return latest  # restoring to the tip is a no-op
-            manifest = dict(old)
-            manifest["restored_from"] = to_version
-            if self._publish(manifest, latest + 1):
-                return latest + 1
+
+        def derive(prev):
+            if to_version == prev:
+                return prev  # restoring to the tip is a no-op
+            return dict(old, restored_from=to_version)
+
+        return self._optimistic_commit(derive)
 
     def vacuum(self, keep_versions: int = 1) -> list[str]:
         """Drop manifests beyond the newest ``keep_versions`` and delete

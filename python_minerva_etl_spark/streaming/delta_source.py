@@ -860,18 +860,11 @@ class _DeltaWriter(DataSourceArrowWriter):
         part_cols = ([c.strip() for c in pb.split(",") if c.strip()]
                      if pb else [])
         dt = DeltaTable(self.path)
-        if dt.versions():
-            snap = dt._replay()  # fail fast, before executors write
+        # fail fast, before executors write
+        snap, part_cols = dt.precheck_write(self.mode, part_cols,
+                                            self.merge_schema)
+        if snap is not None:
             _check_supported(dt, snap)
-            dt._check_writable(snap, self.mode)
-            table_pcols = snap["metaData"].get(
-                "partitionColumns") or []
-            if self.mode == "append":
-                if part_cols and part_cols != table_pcols:
-                    raise ValueError(
-                        f"append partitionBy {part_cols} != table's "
-                        f"partitionColumns {table_pcols}")
-                part_cols = table_pcols
         missing = [c for c in part_cols
                    if c not in {f.name for f in schema.fields}]
         if missing:
@@ -887,7 +880,7 @@ class _DeltaWriter(DataSourceArrowWriter):
     def commit(self, messages):
         adds = [{"add": a} for m in messages if m
                 for a in m.adds]
-        DeltaTable(self.path)._commit_write(
+        DeltaTable(self.path).commit_staged(
             adds, self.mode, self.part_cols, self.schema_,
             merge_schema=self.merge_schema)
 
@@ -920,7 +913,7 @@ class _DeltaStreamWriter(DataSourceStreamArrowWriter):
     def commit(self, messages, batchId: int):
         adds = [{"add": a} for m in messages if m
                 for a in m.adds]
-        DeltaTable(self._batch.path)._commit_write(
+        DeltaTable(self._batch.path).commit_staged(
             adds, "append", self._batch.part_cols,
             self._batch.schema_, txn=(self.app_id, int(batchId)),
             merge_schema=self._batch.merge_schema)

@@ -816,7 +816,7 @@ class _IceWriter(DataSourceArrowWriter):
 
     def __init__(self, options: dict, schema: T.StructType,
                  overwrite: bool):
-        from ..storage.iceberg_write import _precheck_append
+        from ..storage.iceberg_write import precheck_append
 
         if overwrite:
             raise NotImplementedError(
@@ -841,7 +841,7 @@ class _IceWriter(DataSourceArrowWriter):
         # "month(d)"/"year(d)", "bucket(col, N)", "truncate(col, W)"
         # — each executor computes the transformed value per Arrow
         # batch (_PartField.values_arrow) and stages per value.
-        self.ice_schema, self.part = _precheck_append(
+        self.ice_schema, self.part = precheck_append(
             self.path, schema, self.partition_by)
 
     def write(self, iterator):
@@ -898,11 +898,10 @@ class _IceWriter(DataSourceArrowWriter):
         return _IceCommitMessage(entries)
 
     def commit(self, messages):
-        from ..storage.iceberg_write import _commit_staged
+        from ..storage.iceberg_write import commit_staged
 
         entries = [e for m in messages if m for e in m.entries]
-        _commit_staged(self.path, entries, self.ice_schema,
-                       self.part)
+        commit_staged(self.path, entries, self.ice_schema, self.part)
 
     def abort(self, messages):
         for m in messages:
@@ -960,7 +959,7 @@ class _IceStreamWriter(DataSourceStreamArrowWriter):
         return best
 
     def commit(self, messages, batchId: int):
-        from ..storage.iceberg_write import _commit_staged
+        from ..storage.iceberg_write import commit_staged
 
         entries = [e for m in messages if m for e in m.entries]
         if int(batchId) <= self._max_committed():
@@ -970,7 +969,7 @@ class _IceStreamWriter(DataSourceStreamArrowWriter):
                 except OSError:
                     pass
             return
-        _commit_staged(
+        commit_staged(
             self._batch.path, entries, self._batch.ice_schema,
             self._batch.part,
             extra_summary={

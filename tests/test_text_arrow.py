@@ -260,3 +260,25 @@ def test_gopher_quintuple_on_fixture_corpus(spark):
     assert len(texts) == 120
     for doc_id, text in texts.items():
         assert gopher_quintuple(text) == jvm[doc_id], doc_id
+
+
+def test_bytes_conf_raises_on_malformed_value(spark):
+    """Only a missing key falls back to the default: a present but
+    malformed byte size raises naming the conf instead of silently
+    becoming the default, and the session's own maxPartitionBytes
+    value (reported as "134217728b") still parses."""
+    from python_minerva_etl_spark.ext.text_arrow import _bytes_conf
+
+    key = "spark.minerva.text.kernelMinInputBytes"
+    spark.conf.unset(key)
+    assert _bytes_conf(spark, key, 123) == 123
+    try:
+        spark.conf.set(key, "12q")
+        with pytest.raises(ValueError, match=key):
+            _bytes_conf(spark, key, 16 << 20)
+        spark.conf.set(key, "2m")
+        assert _bytes_conf(spark, key, 0) == 2 << 20
+    finally:
+        spark.conf.unset(key)
+    assert _bytes_conf(spark, "spark.sql.files.maxPartitionBytes",
+                       0) == 128 << 20
